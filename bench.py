@@ -1,8 +1,9 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 dir, ``SF_DIR`` below) on ``local[$SPARK_GRAFT_CPUS]`` (default:
+all cores; the session and its driver heap come from
+``session.get_spark``) and prints ONE JSON line::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {...}, "sf": ...}
@@ -31,7 +32,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
 # crawl/parse workload sizes scale with the sf dir (sf0.1 → 200k pages)
 _SF_GUESS = {"sf0.001": 0.001, "sf0.01": 0.01, "sf0.1": 0.1}
 SF = _SF_GUESS.get(Path(SF_DIR).name, 0.1)
@@ -85,29 +86,6 @@ ENTRY_QUERIES = [
     "w1_opic_priority",
     "f_registrable_domain_psl",
 ]
-
-
-def _spark():
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("wos-crawler-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')}",
-        )
-        # tmpfs shuffle dir: this VM's ext4 root serializes concurrent
-        # shuffle-file creates (see tools/bench_scaling.py)
-        .config("spark.local.dir", "/dev/shm/wcs-bench")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def _warm_python_workers(spark) -> None:
@@ -310,8 +288,16 @@ def bench_dedup_index_split(spark) -> dict:
 
 def main() -> None:
     import __spark_entry__ as entrymod
+    from wos_crawler_spark.session import get_spark
 
-    spark = _spark()
+    spark = get_spark(
+        "wos-crawler-spark-bench",
+        cores=CPUS,
+        shuffle_partitions=CPUS,
+        # tmpfs shuffle dir: an ext4 root serializes concurrent
+        # shuffle-file creates (see tools/bench_scaling.py)
+        extra_conf={"spark.local.dir": "/dev/shm/wcs-bench"},
+    )
     queries: dict[str, float] = {}
     extra: dict = {}
 

@@ -4,6 +4,8 @@ uninterrupted run."""
 
 import os
 
+import pytest
+
 from wos_crawler_spark.fixtures.synth import (
     links_table,
     pages_table,
@@ -116,10 +118,14 @@ def test_torn_checkpoint_invisible(spark, tmp_path):
     assert ckpt.latest_wave(d) == 0
 
 
-def test_resume_adopts_cuckoo_flavor(spark, tmp_path):
-    """A checkpointed cuckoo seen-sketch is authoritative on resume:
-    even a cfg that says 'bloom' continues with the cuckoo filter, and
-    the resumed crawl's seen set equals the uninterrupted run's."""
+@pytest.mark.parametrize(
+    "ckpt_flavor, cfg_flavor", [("cuckoo", "bloom"), ("bloom", "cuckoo")]
+)
+def test_resume_adopts_checkpointed_flavor(spark, tmp_path, ckpt_flavor, cfg_flavor):
+    """A checkpointed seen-sketch is authoritative on resume: even a
+    cfg that names the other flavor continues with the checkpoint's
+    filter, and the resumed crawl's seen set equals the uninterrupted
+    run's."""
     pages, seeds, links, robots = _world(spark)
     common = dict(
         delay_s=1.0, quota=4, max_depth=2, rows_per_bucket=8, parse=False,
@@ -129,27 +135,28 @@ def test_resume_adopts_cuckoo_flavor(spark, tmp_path):
     full_dir = str(tmp_path / "full")
     run_crawl(
         spark, pages, seeds, links, robots,
-        CrawlConfig(max_waves=3, ckpt_dir=full_dir, seen_filter="cuckoo",
+        CrawlConfig(max_waves=3, ckpt_dir=full_dir, seen_filter=ckpt_flavor,
                     **common),
     )
     part_dir = str(tmp_path / "part")
     run_crawl(
         spark, pages, seeds, links, robots,
-        CrawlConfig(max_waves=2, ckpt_dir=part_dir, seen_filter="cuckoo",
+        CrawlConfig(max_waves=2, ckpt_dir=part_dir, seen_filter=ckpt_flavor,
                     **common),
     )
-    # resume with a cfg that (wrongly) says bloom — checkpoint wins
+    # resume with a cfg that (wrongly) names the other flavor — checkpoint wins
     run_crawl(
         spark, pages, seeds, links, robots,
-        CrawlConfig(max_waves=3, ckpt_dir=part_dir, seen_filter="bloom",
+        CrawlConfig(max_waves=3, ckpt_dir=part_dir, seen_filter=cfg_flavor,
                     **common),
         resume=True,
     )
-    from wos_crawler_spark.operators.bloom import bloom_from_bytes
+    from wos_crawler_spark.operators.bloom import BloomFilter, bloom_from_bytes
     from wos_crawler_spark.operators.cuckoo import ShardedCuckooFilter
 
+    flavor_cls = {"cuckoo": ShardedCuckooFilter, "bloom": BloomFilter}
     blob = ckpt.read_bloom_bytes(part_dir, 2)
-    assert isinstance(bloom_from_bytes(blob), ShardedCuckooFilter)
+    assert isinstance(bloom_from_bytes(blob), flavor_cls[ckpt_flavor])
     seen_full = {
         r["url_hash"] for r in ckpt.read_seen(spark, full_dir, 2).collect()
     }

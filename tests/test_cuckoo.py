@@ -112,7 +112,7 @@ def test_merge_shape_mismatch_raises():
 def test_serialization_roundtrip_and_dispatch():
     f = CuckooFilter.sized(10_000)
     f.add(KEYS[:5000])
-    back = bloom_from_bytes(f.to_bytes())
+    back = CuckooFilter.from_bytes(f.to_bytes())  # the shard blob
     assert isinstance(back, CuckooFilter)
     assert np.array_equal(back.table, f.table)
 

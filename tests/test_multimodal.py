@@ -331,6 +331,19 @@ def test_sample_frames_real_twin(spark):
             assert int(img[0, 0]) == (aid * 31 + k * 41) % 256
 
 
+def test_sample_frames_real_zero_duration_batch(spark):
+    """A batch whose clips all last 0 ms (1 frame at 2000 fps) samples
+    no frames: an empty result, not a schema error."""
+    clip = _y4m(frames=1, fps=b"2000:1")
+    luma, num, den = mm.decode_y4m(clip)
+    assert len(luma) * 1000 * den // num == 0
+    media = spark.createDataFrame(
+        [(1, "video", clip), (2, "video", clip)],
+        "asset_id long, kind string, payload binary",
+    ).coalesce(1)
+    assert mm.sample_frames_real(media, every_ms=100).collect() == []
+
+
 def test_video_frames_compose_with_image_family(spark):
     """The emitted P5 frames flow straight into the image dedup
     family: identical frames from planted duplicate videos land at

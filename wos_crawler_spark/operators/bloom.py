@@ -1,4 +1,5 @@
-"""Broadcast-merged Bloom URL-seen filter (SURVEY.md F1/J1/A2).
+"""Broadcast-merged Bloom URL-seen filter (SURVEY.md F1/J1/A2), and the
+one place that picks the seen-sketch flavor (Bloom or cuckoo).
 
 Reference behavior: ``dep:scrapy.dupefilters::RFPDupeFilter.request_seen``
 — an in-memory Python ``set`` of SHA1 request fingerprints, single
@@ -14,21 +15,28 @@ Design (scale notes for 10^10 URLs):
   (Bloom has none). The Bloom's job is to keep the anti-join's probe
   side small: at steady state most rediscovered URLs are dropped
   executor-side before any shuffle.
-- **Mergeable partials**: each partition builds a local bit array over
-  its ``url_hash`` values (``mapInPandas``, one row out per
-  partition), the driver ORs them (Spark's Python API has no native
-  tree-merging UDAF — documented in SURVEY.md §2.8) and re-broadcasts
-  once per wave. Partial size == final size == m/8 bytes.
-- **Sizing at 10^10**: a monolithic 1e10-key / 1%-fpp Bloom is ~12 GB
-  — too big to broadcast. The intended cluster deployment shards the
-  filter into B banks by ``url_hash`` prefix (``bank = url_hash >>>
-  (64 - log2 B)``); each executor holds only the banks for its
-  hash-partitioned frontier slice, so per-executor memory is m/B. The
-  sandbox uses one bank; the bank math is pure arithmetic on the same
-  structure. Raising fpp (the exact anti-join rescues correctness)
-  trades broadcast size for anti-join traffic.
+- **Banks**: a single 1e10-key / 1%-fpp bit array is ~12 GB — too big
+  to broadcast or hold per executor. The filter is split into B banks
+  routed by the top hash bits (``bank = url_hash >>> (64 - log2 B)``),
+  each an independent m/B-bit Bloom; an executor needs only the banks
+  its hash-partitioned frontier slice routes to, and build, merge and
+  serialization stay per bank. B=1 is the ordinary single-array
+  filter. Raising fpp (the exact anti-join rescues correctness) trades
+  broadcast size for anti-join traffic.
+- **Mergeable partials**: each partition sets bits in the banks its
+  keys route to (``mapInPandas``), one task per bank ORs that bank's
+  partials executor-side, and the driver receives B arrays of m/B
+  bits and re-broadcasts once per wave.
 - Hashing: positions derive from the 64-bit ``xxhash64(url_canon)``
   via splitmix64 double hashing — no string re-hashing in Python.
+
+The seen sketch is either this filter or the deletable
+:class:`~wos_crawler_spark.operators.cuckoo.ShardedCuckooFilter`. Both
+share ``add`` / ``might_contain`` / ``merge`` / ``shape`` /
+``to_bytes`` / ``build_like`` / ``evict``, so the crawl loop never
+branches on the flavor: a fresh crawl gets :func:`sized_sketch`, a
+resume gets :func:`bloom_from_bytes`, and each wave's delta is built
+with ``sketch.build_like`` — the sketch's own flavor and bank count.
 
 All operations are vectorized numpy over Arrow batches.
 """
@@ -38,12 +46,20 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 from dataclasses import dataclass
+from typing import TYPE_CHECKING, Union
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+if TYPE_CHECKING:
+    from wos_crawler_spark.operators.cuckoo import ShardedCuckooFilter
+
 MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
+_BANK_MAGIC = 0x42414E4B  # "BANK" — cannot collide with n_hashes (≤64)
+
+#: The URL-seen sketch: either flavor, same duck-typed surface.
+SeenSketch = Union["BloomFilter", "ShardedCuckooFilter"]
 
 
 def _splitmix64_np(x: np.ndarray) -> np.ndarray:
@@ -54,54 +70,81 @@ def _splitmix64_np(x: np.ndarray) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
+def _bank_of(u: np.ndarray, n_banks: int) -> np.ndarray:
+    """Bank (or shard) of each uint64 hash: its top log2(n_banks) bits."""
+    if n_banks == 1:
+        return np.zeros(len(u), dtype=np.uint64)
+    return u >> np.uint64(64 - (n_banks.bit_length() - 1))
+
+
+def _bit_positions(keys, n_banks: int, m: int, k: int) -> np.ndarray:
+    """(len(keys), k) int64 indexes into the bank-major bit array: the
+    key's bank times m, plus its double-hashed bit within the bank."""
+    u = np.asarray(keys).astype(np.int64).view(np.uint64)
+    h1 = _splitmix64_np(u)
+    h2 = _splitmix64_np(h1) | np.uint64(1)
+    ks = np.arange(k, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        pos = (h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(m)
+    if n_banks > 1:
+        pos += (_bank_of(u, n_banks) * np.uint64(m))[:, None]
+    return pos.astype(np.int64)
+
+
+def _same_shape(sketch: SeenSketch, built: SeenSketch) -> SeenSketch:
+    """``built`` (from cfg capacity/fpp) if it can merge into ``sketch``;
+    silently merging mismatched filters would corrupt the seen set."""
+    if built.shape != sketch.shape:
+        raise ValueError(
+            f"seen-sketch shape {sketch.shape} is incompatible with "
+            f"{built.shape} built from the cfg bloom_capacity/bloom_fpp; "
+            f"use the crawl's original filter config"
+        )
+    return built
+
+
 @dataclass
 class BloomFilter:
-    """Fixed-size mergeable Bloom over int64 keys."""
+    """Fixed-size mergeable Bloom over int64 keys, split into
+    ``n_banks`` (a power of two) independent banks of m bits each."""
 
-    bits: np.ndarray  # uint8 array of m/8 bytes
+    bits: np.ndarray  # (n_banks, m/8) uint8, bit i of a bank = byte i>>3, bit i&7
     n_hashes: int
 
     @classmethod
-    def sized(cls, capacity: int, fpp: float = 0.01) -> "BloomFilter":
-        m = max(64, int(-capacity * math.log(fpp) / (math.log(2) ** 2)))
+    def sized(cls, capacity: int, fpp: float = 0.01, n_banks: int = 1) -> "BloomFilter":
+        if n_banks < 1 or (n_banks & (n_banks - 1)):
+            raise ValueError("n_banks must be a power of two")
+        per_bank = max(1, capacity // n_banks)
+        m = max(64, int(-per_bank * math.log(fpp) / (math.log(2) ** 2)))
         m = (m + 7) // 8 * 8
-        k = max(1, round(m / max(capacity, 1) * math.log(2)))
-        return cls(bits=np.zeros(m // 8, dtype=np.uint8), n_hashes=int(k))
+        k = max(1, round(m / per_bank * math.log(2)))
+        return cls(bits=np.zeros((n_banks, m // 8), dtype=np.uint8), n_hashes=int(k))
+
+    @property
+    def n_banks(self) -> int:
+        return self.bits.shape[0]
 
     @property
     def m(self) -> int:
-        return len(self.bits) * 8
-
-    def _positions(self, keys: np.ndarray) -> np.ndarray:
-        """(len(keys), k) bit positions via double hashing."""
-        x = keys.astype(np.int64).view(np.uint64)
-        h1 = _splitmix64_np(x)
-        h2 = _splitmix64_np(h1) | np.uint64(1)
-        ks = np.arange(self.n_hashes, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            return ((h1[:, None] + ks[None, :] * h2[:, None]) & MASK64) % np.uint64(
-                self.m
-            )
-
-    def add(self, keys: np.ndarray) -> None:
-        if len(keys) == 0:
-            return
-        pos = self._positions(np.asarray(keys)).ravel()
-        np.bitwise_or.at(self.bits, (pos >> 3).astype(np.int64), (1 << (pos & np.uint64(7))).astype(np.uint8))
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        pos = self._positions(np.asarray(keys))
-        byte = self.bits[(pos >> 3).astype(np.int64)]
-        bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1
-        return bit.all(axis=1)
+        """Bits per bank."""
+        return self.bits.shape[1] * 8
 
     @property
     def shape(self) -> tuple[int, int, int]:
-        """(n_banks, bits-per-bank, n_hashes) — 1 bank for the
-        monolithic flavor; comparable across flavors."""
-        return (1, self.m, self.n_hashes)
+        """(n_banks, bits-per-bank, n_hashes)."""
+        return (self.n_banks, self.m, self.n_hashes)
+
+    def add(self, keys: np.ndarray) -> None:
+        pos = _bit_positions(keys, *self.shape).ravel()
+        np.bitwise_or.at(
+            self.bits.reshape(-1), pos >> 3, (1 << (pos & 7)).astype(np.uint8)
+        )
+
+    def might_contain(self, keys: np.ndarray) -> np.ndarray:
+        pos = _bit_positions(keys, *self.shape)
+        byte = self.bits.reshape(-1)[pos >> 3]
+        return ((byte >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
         if not isinstance(other, BloomFilter) or self.shape != other.shape:
@@ -111,292 +154,117 @@ class BloomFilter:
             )
         return BloomFilter(bits=self.bits | other.bits, n_hashes=self.n_hashes)
 
+    def build_like(
+        self, df: DataFrame, hash_col: str, capacity: int, fpp: float = 0.01
+    ) -> "BloomFilter":
+        """Distributed build of ``df``'s keys with this filter's bank
+        count; raises if cfg capacity/fpp give another shape."""
+        return _same_shape(self, build_bloom(df, hash_col, capacity, fpp, self.n_banks))
+
+    def evict(
+        self, keys: DataFrame, seen: DataFrame, capacity: int,
+        fpp: float = 0.01, hash_col: str = "url_hash",
+    ) -> "BloomFilter":
+        """Recrawl eviction: a Bloom cannot delete, so it is rebuilt
+        from the ``seen`` keys not in ``keys`` (a full distributed
+        build — the cuckoo flavor deletes in place instead)."""
+        survivors = seen.join(keys, hash_col, "left_anti")
+        return self.build_like(survivors, hash_col, capacity, fpp)
+
     # -- checkpoint serialization (SURVEY §7.1 step 6)
     def to_bytes(self) -> bytes:
-        return self.n_hashes.to_bytes(4, "little") + self.bits.tobytes()
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "BloomFilter":
-        k = int.from_bytes(raw[:4], "little")
-        return cls(bits=np.frombuffer(raw[4:], dtype=np.uint8).copy(), n_hashes=k)
-
-
-_BANK_MAGIC = 0x42414E4B  # "BANK" — cannot collide with n_hashes (≤64)
-
-
-@dataclass
-class BankedBloomFilter:
-    """Bank-sharded Bloom: B independent :class:`BloomFilter` banks,
-    keys routed by the TOP log2(B) bits of the hash
-    (``bank = url_hash >>> (64 - log2 B)`` — the north_rule's
-    10^10-scale layout from the module docstring, now code).
-
-    Why banks: a monolithic 1e10-key/1%-fpp filter is ~12 GB — too big
-    to broadcast or hold per executor. With B banks each executor
-    holds only the banks its hash-partitioned frontier slice routes to
-    (m/B bytes per bank); partial build/merge/serialize all stay
-    per-bank, so no single task or broadcast ever touches the full m
-    bits. B=1 degenerates to the monolithic filter bit-for-bit.
-
-    Same duck-typed surface as BloomFilter (add / might_contain /
-    merge / to_bytes), so the crawl loop, dedup prefilter and
-    checkpoints take either."""
-
-    banks: list[BloomFilter]
-
-    @classmethod
-    def sized(cls, capacity: int, fpp: float = 0.01, n_banks: int = 4) -> "BankedBloomFilter":
-        if n_banks < 1 or (n_banks & (n_banks - 1)):
-            raise ValueError("n_banks must be a power of two")
-        per_bank = max(1, capacity // n_banks)
-        return cls([BloomFilter.sized(per_bank, fpp) for _ in range(n_banks)])
-
-    @property
-    def n_banks(self) -> int:
-        return len(self.banks)
-
-    def _bank_idx(self, keys: np.ndarray) -> np.ndarray:
-        if self.n_banks == 1:
-            return np.zeros(len(keys), dtype=np.int64)
-        shift = np.uint64(64 - (self.n_banks.bit_length() - 1))
-        u = keys.astype(np.int64).view(np.uint64)
-        return (u >> shift).astype(np.int64)
-
-    def add(self, keys: np.ndarray) -> None:
-        keys = np.asarray(keys)
-        if not len(keys):
-            return
-        idx = self._bank_idx(keys)
-        for b in range(self.n_banks):
-            m = idx == b
-            if m.any():
-                self.banks[b].add(keys[m])
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        keys = np.asarray(keys)
-        out = np.zeros(len(keys), dtype=bool)
-        if not len(keys):
-            return out
-        idx = self._bank_idx(keys)
-        for b in range(self.n_banks):
-            m = idx == b
-            if m.any():
-                out[m] = self.banks[b].might_contain(keys[m])
-        return out
-
-    @property
-    def shape(self) -> tuple[int, int, int]:
-        return (self.n_banks, self.banks[0].m, self.banks[0].n_hashes)
-
-    def merge(self, other: "BankedBloomFilter") -> "BankedBloomFilter":
-        if not isinstance(other, BankedBloomFilter) or self.shape != other.shape:
-            raise ValueError(
-                f"cannot merge Bloom filters of different flavor/shape: "
-                f"{self.shape} vs {getattr(other, 'shape', type(other))}"
-            )
-        return BankedBloomFilter(
-            [a.merge(b) for a, b in zip(self.banks, other.banks)]
-        )
-
-    def to_bytes(self) -> bytes:
-        parts = [
-            _BANK_MAGIC.to_bytes(4, "little"),
-            self.n_banks.to_bytes(4, "little"),
-        ]
-        for b in self.banks:
-            raw = b.to_bytes()
-            parts.append(len(raw).to_bytes(4, "little"))
-            parts.append(raw)
+        """BANK magic, n_banks, then per bank [len, n_hashes, bits]."""
+        rec_len = (4 + self.bits.shape[1]).to_bytes(4, "little")
+        k = self.n_hashes.to_bytes(4, "little")
+        parts = [_BANK_MAGIC.to_bytes(4, "little"), self.n_banks.to_bytes(4, "little")]
+        for bank in self.bits:
+            parts += [rec_len, k, bank.tobytes()]
         return b"".join(parts)
 
     @classmethod
-    def from_bytes(cls, raw: bytes) -> "BankedBloomFilter":
-        if int.from_bytes(raw[:4], "little") != _BANK_MAGIC:
-            raise ValueError("not a banked Bloom serialization (bad magic)")
+    def from_bytes(cls, raw: bytes) -> "BloomFilter":
+        """Reads :meth:`to_bytes` output, and the older one-bank layout
+        (n_hashes, then the bits) as a 1-bank filter."""
+        head = int.from_bytes(raw[:4], "little")
+        if head != _BANK_MAGIC:
+            if not 1 <= head <= 64:
+                raise ValueError("not a Bloom filter serialization")
+            bits = np.frombuffer(raw[4:], dtype=np.uint8).reshape(1, -1)
+            return cls(bits=bits.copy(), n_hashes=head)
         n = int.from_bytes(raw[4:8], "little")
-        banks, off = [], 8
-        for _ in range(n):
-            ln = int.from_bytes(raw[off : off + 4], "little")
-            off += 4
-            banks.append(BloomFilter.from_bytes(raw[off : off + ln]))
-            off += ln
-        return cls(banks)
+        rec_len = int.from_bytes(raw[8:12], "little")
+        recs = np.frombuffer(raw[8:], dtype=np.uint8).reshape(n, 4 + rec_len)
+        k = int.from_bytes(raw[12:16], "little")
+        return cls(bits=recs[:, 8:].copy(), n_hashes=k)
 
 
-#: Either filter flavor — everything downstream is duck-typed.
-AnyBloom = BloomFilter | BankedBloomFilter
+def sized_sketch(
+    flavor: str, capacity: int, fpp: float = 0.01, n_banks: int = 1
+) -> SeenSketch:
+    """Empty seen sketch of a fresh crawl: ``flavor`` "bloom" (n_banks
+    banks) or "cuckoo" (n_banks shards)."""
+    if flavor == "bloom":
+        return BloomFilter.sized(capacity, fpp, n_banks)
+    if flavor == "cuckoo":
+        # lazy import: cuckoo imports the hashing helpers from this module
+        from wos_crawler_spark.operators.cuckoo import ShardedCuckooFilter
+
+        return ShardedCuckooFilter.sized(capacity, n_banks)
+    raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', not {flavor!r}")
 
 
-def bloom_from_bytes(raw: bytes) -> "AnyBloom":
-    """Deserialize any seen-filter flavor by magic header (banked
-    Bloom, cuckoo, sharded cuckoo; a plain Bloom's first word is its
-    n_hashes ≤ 64, which cannot collide with the magics)."""
-    if len(raw) >= 4:
-        magic = int.from_bytes(raw[:4], "little")
-        if magic == _BANK_MAGIC:
-            return BankedBloomFilter.from_bytes(raw)
-        # lazy import: cuckoo imports _splitmix64_np from this module
-        from wos_crawler_spark.operators import cuckoo as _ck
+def bloom_from_bytes(raw: bytes) -> SeenSketch:
+    """Deserialize a checkpointed seen sketch of either flavor: the
+    sharded cuckoo by its magic header, anything else as a Bloom."""
+    from wos_crawler_spark.operators.cuckoo import SHARD_MAGIC, ShardedCuckooFilter
 
-        if magic == _ck.CUCKOO_MAGIC:
-            return _ck.CuckooFilter.from_bytes(raw)
-        if magic == _ck.SHARD_MAGIC:
-            return _ck.ShardedCuckooFilter.from_bytes(raw)
+    if int.from_bytes(raw[:4], "little") == SHARD_MAGIC:
+        return ShardedCuckooFilter.from_bytes(raw)
     return BloomFilter.from_bytes(raw)
 
 
-def build_bloom(df: DataFrame, hash_col: str, capacity: int, fpp: float = 0.01) -> BloomFilter:
-    """Distributed build: per-partition partial bit arrays (mapInPandas),
-    OR-reduced **executor-side** (one shuffle of the fixed-size partials
-    to a single merge task — the tree-merge documented in SURVEY §2.8),
-    so exactly ONE m/8-byte array crosses to the driver, via Arrow.
-    Driver traffic is O(m), independent of partition count."""
-    proto = BloomFilter.sized(capacity, fpp)
-    m_bytes, k = len(proto.bits), proto.n_hashes
+def build_bloom(
+    df: DataFrame, hash_col: str, capacity: int, fpp: float = 0.01, n_banks: int = 1
+) -> BloomFilter:
+    """Distributed build. Each partition emits one (bank, bits) partial
+    per bank its keys route to, m/B bits each; one task per bank
+    OR-folds that bank's partials executor-side, so the driver receives
+    B arrays of m/B bits via Arrow — O(m), independent of partition
+    count. At cluster scale the frontier is hash-partitioned on
+    url_hash, so most partitions touch one bank."""
+    out = BloomFilter.sized(capacity, fpp, n_banks)
+    n, m, k = out.n_banks, out.m, out.n_hashes
 
     def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Set bits via boolean scatter-assignment + packbits instead of
         # np.bitwise_or.at: plain stores vectorize (~20x faster than
         # the unbuffered read-modify-write .at scatter at 10^7 keys).
-        # Cost: one transient m-bit bool array (m BYTES) per task —
-        # at 10^10-scale the bank sharding below shrinks it by B.
-        proto_t = BloomFilter(bits=np.zeros(m_bytes, dtype=np.uint8), n_hashes=k)
-        bits_bool = np.zeros(m_bytes * 8, dtype=bool)
-        any_rows = False
+        # Cost: one transient m/B-byte bool array per touched bank.
+        banks: dict[int, np.ndarray] = {}
         for pdf in batches:
-            if len(pdf):
-                any_rows = True
-                pos = proto_t._positions(pdf[hash_col].to_numpy())
-                bits_bool[pos.ravel().astype(np.int64)] = True
-        if any_rows:
-            # packbits is MSB-first per byte; our bit index convention
-            # is LSB-first (1 << (pos & 7)), so pack with bitorder
-            # 'little' to match might_contain/add.
-            packed = np.packbits(bits_bool, bitorder="little")
-            yield pd.DataFrame({"bits": [packed.tobytes()]})
-
-    def _reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: np.ndarray | None = None
-        for pdf in batches:
-            for raw in pdf["bits"]:
-                a = np.frombuffer(raw, dtype=np.uint8)
-                acc = a.copy() if acc is None else (acc | a)
-        if acc is not None:
-            yield pd.DataFrame({"bits": [acc.tobytes()]})
-
-    # Stage 1 emits one fixed-size partial per non-empty partition;
-    # stage 2 shuffles those partials to ONE task and OR-folds them
-    # executor-side, so exactly one m/8-byte array crosses to the
-    # driver (over Arrow, not the row-based py4j path). Driver traffic
-    # is O(m), independent of partition count. On a cluster with
-    # thousands of partitions, add an intermediate repartition(B)
-    # _reduce level so no single task fans in more than ~B partials.
-    partials = df.select(hash_col).mapInPandas(_partial, "bits binary")
-    merged = (
-        partials.repartition(1).mapInPandas(_reduce, "bits binary").toPandas()
-    )
-    out = BloomFilter(bits=np.zeros(m_bytes, dtype=np.uint8), n_hashes=k)
-    for raw in merged["bits"]:
-        out.bits |= np.frombuffer(raw, dtype=np.uint8)
-    return out
-
-
-def build_banked_bloom(
-    df: DataFrame,
-    hash_col: str,
-    capacity: int,
-    fpp: float = 0.01,
-    n_banks: int = 4,
-) -> BankedBloomFilter:
-    """Distributed banked build. Per-partition partials emit one
-    (bank, bits) row per bank they saw — each m/B bits, so the
-    transient bool array per task is also m/B per bank; the per-bank
-    OR-fold runs as B independent groupBy tasks (vs build_bloom's
-    single merge task), and the driver receives exactly B rows of m/B
-    bytes = O(m) total. At cluster scale the frontier is hash-
-    partitioned on url_hash, so most partitions route to ONE bank and
-    the partial traffic collapses to ~m/B per partition."""
-    proto = BankedBloomFilter.sized(capacity, fpp, n_banks)
-    m_bytes = len(proto.banks[0].bits)
-    k = proto.banks[0].n_hashes
-    nb = n_banks
-
-    def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tmpl = BankedBloomFilter(
-            [BloomFilter(np.zeros(m_bytes, dtype=np.uint8), k) for _ in range(nb)]
-        )
-        bank_bits: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keys = pdf[hash_col].to_numpy()
-            idx = tmpl._bank_idx(keys)
-            for b in np.unique(idx):
-                bb = bank_bits.setdefault(
-                    int(b), np.zeros(m_bytes * 8, dtype=bool)
-                )
-                pos = tmpl.banks[int(b)]._positions(keys[idx == b])
-                bb[pos.ravel().astype(np.int64)] = True
-        for b, bb in bank_bits.items():
-            yield pd.DataFrame(
-                {"bank": [b],
-                 "bits": [np.packbits(bb, bitorder="little").tobytes()]}
-            )
+            pos = _bit_positions(pdf[hash_col].to_numpy(), n, m, k).ravel()
+            bank, bit = np.divmod(pos, m)
+            for b in np.unique(bank):
+                bits = banks.setdefault(int(b), np.zeros(m, dtype=bool))
+                bits[bit[bank == b]] = True
+        for b, bits in banks.items():
+            # LSB-first within each byte, matching add/might_contain
+            packed = np.packbits(bits, bitorder="little")
+            yield pd.DataFrame({"bank": [b], "bits": [packed.tobytes()]})
 
     def _reduce(key, pdf):
-        acc: np.ndarray | None = None
+        acc = np.zeros(m // 8, dtype=np.uint8)
         for raw in pdf["bits"]:
-            a = np.frombuffer(raw, dtype=np.uint8)
-            acc = a.copy() if acc is None else (acc | a)
+            acc |= np.frombuffer(raw, dtype=np.uint8)
         return pd.DataFrame({"bank": [key[0]], "bits": [acc.tobytes()]})
 
-    partials = df.select(hash_col).mapInPandas(_partial, "bank int, bits binary")
     merged = (
-        partials.groupBy("bank")
+        df.select(hash_col)
+        .mapInPandas(_partial, "bank int, bits binary")
+        .groupBy("bank")
         .applyInPandas(_reduce, "bank int, bits binary")
         .toPandas()
     )
-    out = BankedBloomFilter(
-        [BloomFilter(np.zeros(m_bytes, dtype=np.uint8), k) for _ in range(nb)]
-    )
-    for _, row in merged.iterrows():
-        out.banks[int(row["bank"])].bits |= np.frombuffer(
-            row["bits"], dtype=np.uint8
-        )
+    for b, raw in zip(merged["bank"], merged["bits"]):
+        out.bits[int(b)] |= np.frombuffer(raw, dtype=np.uint8)
     return out
-
-
-#: Executor-side deserialization cache (see dedup._BLOOM_CACHE — same
-#: rationale: from_bytes copies the full bit array; cache per task
-#: process keyed by broadcast id).
-_PREFILTER_CACHE: dict[int, "AnyBloom"] = {}
-_CACHE_TOKEN = 0
-
-
-def bloom_prefilter(df: DataFrame, bloom: AnyBloom, hash_col: str = "url_hash", keep_maybe_seen: bool = False) -> DataFrame:
-    """Executor-side prefilter: drop rows the Bloom says are seen
-    (definitely-new rows pass; 'maybe seen' rows go to the exact
-    anti-join when ``keep_maybe_seen`` — see frontier.dedup)."""
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast(bloom.to_bytes())
-    global _CACHE_TOKEN
-    _CACHE_TOKEN += 1
-    token = _CACHE_TOKEN  # closure-captured cache key (Broadcast has no
-    # stable python-side id attribute across pyspark versions)
-    cols = df.columns
-    schema = df.schema
-
-    def _filt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = _PREFILTER_CACHE.get(token)
-        if bf is None:
-            if len(_PREFILTER_CACHE) > 8:
-                _PREFILTER_CACHE.clear()
-            bf = bloom_from_bytes(b.value)
-            _PREFILTER_CACHE[token] = bf
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            maybe = bf.might_contain(pdf[hash_col].to_numpy())
-            yield pdf[maybe] if keep_maybe_seen else pdf[~maybe]
-
-    return df.mapInPandas(_filt, schema).select(cols)

@@ -11,13 +11,16 @@ Practically Better Than Bloom" (CoNEXT 2014): 4-slot buckets, 16-bit
 fingerprints, partial-key cuckoo hashing (the alternate bucket is
 ``i ^ hash(fp)``, so relocation never needs the original key).
 
-Scale design (10^10 URLs), mirroring the banked Bloom:
+Scale design (10^10 URLs), mirroring the Bloom's banks:
 
 - **Sharded by the top hash bits** (``shard = url_hash >>> (64 -
-  log2 S)``): each shard is an independent filter built by ONE task
-  over its co-routed keys, so no task ever holds more than ~N/S keys
-  and per-executor memory is table/S. Shards are the build-parallelism
-  unit (a cuckoo table cannot be OR-merged bit-wise like Bloom).
+  log2 S)``): :class:`ShardedCuckooFilter` holds S independent
+  :class:`CuckooFilter` shards, each built by ONE task over its
+  co-routed keys, so no task ever holds more than ~N/S keys and
+  per-executor memory is table/S. Shards are the build-parallelism
+  unit (a cuckoo table cannot be OR-merged bit-wise like Bloom). S=1
+  is the ordinary single-table filter; a crawl only ever holds the
+  sharded class.
 - **Mergeable anyway**: a slot stores (bucket b, fp) and the candidate
   pair {b, b ^ hash(fp)} is recoverable from exactly that, so
   ``merge`` re-inserts the other filter's occupied slots — the
@@ -28,10 +31,10 @@ Scale design (10^10 URLs), mirroring the banked Bloom:
   layout, so every build path sorts its keys first and eviction picks
   its victim slot round-robin — two builds over the same key set are
   byte-identical, whatever the input partitioning.
-- Same duck-typed surface as the Blooms (``add`` / ``might_contain``
-  / ``merge`` / ``to_bytes`` / ``shape``) — ``dedup_frontier``'s
-  prefilter, the crawl loop's per-wave fold and the checkpoint
-  serialization take any flavor via ``bloom.bloom_from_bytes``.
+- Same duck-typed surface as the Bloom (``add`` / ``might_contain`` /
+  ``merge`` / ``to_bytes`` / ``shape`` / ``build_like`` / ``evict``),
+  so the crawl loop, ``dedup_frontier``'s prefilter and the checkpoint
+  (``bloom.bloom_from_bytes``) never branch on the flavor.
 
 False-positive rate: 2 buckets × 4 slots × 2^-16 ≈ 1.2e-4 at full
 load — an order below the Bloom default; correctness never depends on
@@ -47,7 +50,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from wos_crawler_spark.operators.bloom import _splitmix64_np
+from wos_crawler_spark.operators.bloom import _bank_of, _same_shape, _splitmix64_np
 
 SLOTS = 4
 MAX_KICKS = 500
@@ -78,7 +81,8 @@ def _alt_delta(fp: np.ndarray, n_buckets: int) -> np.ndarray:
 
 @dataclass
 class CuckooFilter:
-    """Fixed-size deletable cuckoo filter over int64 keys."""
+    """Fixed-size deletable cuckoo filter over int64 keys — the shard
+    type of :class:`ShardedCuckooFilter`."""
 
     table: np.ndarray  # (n_buckets, SLOTS) uint16; 0 = empty
 
@@ -264,8 +268,7 @@ class CuckooFilter:
 class ShardedCuckooFilter:
     """S independent CuckooFilter shards routed by the TOP log2(S)
     hash bits — the 10^10-scale layout (executors hold only the shards
-    their hash-partitioned frontier slice routes to). S=1 degenerates
-    to the monolithic filter byte-for-byte."""
+    their hash-partitioned frontier slice routes to)."""
 
     shards: list[CuckooFilter]
 
@@ -284,19 +287,10 @@ class ShardedCuckooFilter:
     def shape(self) -> tuple:
         return ("cuckoo", self.n_shards, self.shards[0].n_buckets, SLOTS)
 
-    def _shard_idx(self, keys: np.ndarray) -> np.ndarray:
-        if self.n_shards == 1:
-            return np.zeros(len(keys), dtype=np.int64)
-        shift = np.uint64(64 - (self.n_shards.bit_length() - 1))
-        u = np.asarray(keys).astype(np.int64).view(np.uint64)
-        return (u >> shift).astype(np.int64)
-
     def _by_shard(self, keys: np.ndarray, fn) -> np.ndarray:
         keys = np.asarray(keys)
         out = np.zeros(len(keys), dtype=bool)
-        if not len(keys):
-            return out
-        idx = self._shard_idx(keys)
+        idx = _bank_of(keys.astype(np.int64).view(np.uint64), self.n_shards)
         for s in range(self.n_shards):
             m = idx == s
             if m.any():
@@ -304,14 +298,7 @@ class ShardedCuckooFilter:
         return out
 
     def add(self, keys: np.ndarray) -> None:
-        keys = np.asarray(keys)
-        if not len(keys):
-            return
-        idx = self._shard_idx(keys)
-        for s in range(self.n_shards):
-            m = idx == s
-            if m.any():
-                self.shards[s].add(keys[m])
+        self._by_shard(keys, lambda f, k: f.add(k))
 
     def might_contain(self, keys: np.ndarray) -> np.ndarray:
         return self._by_shard(keys, lambda f, k: f.might_contain(k))
@@ -328,6 +315,24 @@ class ShardedCuckooFilter:
         return ShardedCuckooFilter(
             [a.merge(b) for a, b in zip(self.shards, other.shards)]
         )
+
+    def build_like(
+        self, df: DataFrame, hash_col: str, capacity: int, fpp: float = 0.01
+    ) -> "ShardedCuckooFilter":
+        """Distributed build of ``df``'s keys with this filter's shard
+        count (``fpp`` is the Bloom's knob, unused here); raises if cfg
+        capacity gives another shape."""
+        return _same_shape(
+            self, build_sharded_cuckoo(df, hash_col, capacity, self.n_shards)
+        )
+
+    def evict(
+        self, keys: DataFrame, seen: DataFrame, capacity: int,
+        fpp: float = 0.01, hash_col: str = "url_hash",
+    ) -> "ShardedCuckooFilter":
+        """Recrawl eviction: delete ``keys`` in place, O(evicted) —
+        ``seen``/``capacity``/``fpp`` are what a Bloom's rebuild needs."""
+        return evict_sharded_cuckoo(self, keys, hash_col)
 
     def to_bytes(self) -> bytes:
         parts = [
@@ -354,96 +359,84 @@ class ShardedCuckooFilter:
         return cls(shards)
 
 
+def _per_shard(
+    df: DataFrame, hash_col: str, n_shards: int, fn
+) -> dict[int, CuckooFilter]:
+    """Route ``df``'s keys to their shard by the TOP hash bits (one
+    exchange of 8-byte hashes — never the pages); ONE task per touched
+    shard runs ``fn(shard, sorted unique keys) -> CuckooFilter`` (so
+    the result does not depend on input partitioning) and its
+    fixed-size blob crosses to the driver via Arrow."""
+    from pyspark.sql import functions as F
+
+    def _task(key, pdf):
+        f = fn(key[0], np.unique(pdf[hash_col].to_numpy()))
+        return pd.DataFrame({"shard": [key[0]], "blob": [f.to_bytes()]})
+
+    shard_col = (
+        F.shiftrightunsigned(
+            F.col(hash_col).cast("long"), 64 - (n_shards.bit_length() - 1)
+        ).cast("int")
+        if n_shards > 1
+        else F.lit(0)
+    )
+    rows = (
+        df.select(F.col(hash_col), shard_col.alias("_shard"))
+        .groupBy("_shard")
+        .applyInPandas(_task, "shard int, blob binary")
+        .toPandas()
+    )
+    return {
+        int(s): CuckooFilter.from_bytes(b) for s, b in zip(rows["shard"], rows["blob"])
+    }
+
+
 def evict_sharded_cuckoo(
     ck: ShardedCuckooFilter, expired: DataFrame, hash_col: str = "url_hash"
 ) -> ShardedCuckooFilter:
     """Distributed recrawl eviction — the cuckoo differentiator the
     Bloom flavor structurally lacks (a Bloom eviction is a full
-    rebuild; see plans/recrawl.py). Mirrors :func:`build_sharded_cuckoo`:
-    expired keys route to their shard by the TOP hash bits (one
-    exchange of 8-byte hashes), ONE task per touched shard deletes its
-    SORTED key slice from that shard's table (deterministic result
-    regardless of input partitioning) and emits the new fixed-size
-    blob; untouched shards pass through unchanged. Shard blobs travel
-    via broadcast (same object the probe path already ships).
+    rebuild; see BloomFilter.evict). ONE task per touched shard deletes
+    its sorted key slice from that shard's table; untouched shards pass
+    through unchanged. Shard blobs travel via broadcast (same object
+    the probe path already ships).
 
     Contract (standard cuckoo-filter rule): every expired key must
     actually be in the filter — deleting a never-inserted key can
     evict a colliding fingerprint and create a false negative for a
     LIVE url. plans/recrawl.evict_for_recrawl enforces this by
     semi-joining expired against the checkpointed seen set first."""
-    from pyspark.sql import functions as F
-
-    spark = expired.sparkSession
-    blobs = spark.sparkContext.broadcast([s.to_bytes() for s in ck.shards])
-    ns = ck.n_shards
-
-    def _evict(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        f = CuckooFilter.from_bytes(blobs.value[key[0]])
-        f.delete(np.unique(pdf[hash_col].to_numpy()))  # unique() sorts
-        return pd.DataFrame({"shard": [key[0]], "blob": [f.to_bytes()]})
-
-    shard_col = (
-        F.shiftrightunsigned(
-            F.col(hash_col).cast("long"), 64 - (ns.bit_length() - 1)
-        ).cast("int")
-        if ns > 1
-        else F.lit(0)
+    blobs = expired.sparkSession.sparkContext.broadcast(
+        [s.to_bytes() for s in ck.shards]
     )
-    touched = (
-        expired.select(F.col(hash_col), shard_col.alias("_shard"))
-        .groupBy("_shard")
-        .applyInPandas(_evict, "shard int, blob binary")
-        .toPandas()
-    )
-    out = ShardedCuckooFilter(
-        [CuckooFilter.from_bytes(b) for b in blobs.value]
-    )
-    for _, row in touched.iterrows():
-        out.shards[int(row["shard"])] = CuckooFilter.from_bytes(row["blob"])
-    return out
+
+    def _evict(shard: int, keys: np.ndarray) -> CuckooFilter:
+        f = CuckooFilter.from_bytes(blobs.value[shard])
+        f.delete(keys)
+        return f
+
+    shards = [CuckooFilter(s.table.copy()) for s in ck.shards]
+    for s, f in _per_shard(expired, hash_col, ck.n_shards, _evict).items():
+        shards[s] = f
+    return ShardedCuckooFilter(shards)
 
 
 def build_sharded_cuckoo(
     df: DataFrame, hash_col: str, capacity: int, n_shards: int = 4
 ) -> ShardedCuckooFilter:
-    """Distributed build: keys are routed to their shard (one exchange
-    of 8-byte hashes — the filter input, never the pages), each shard
-    is built by ONE task over its SORTED keys (deterministic layout
-    regardless of input partitioning), and exactly S fixed-size blobs
-    cross to the driver via Arrow. Shards are the parallelism unit —
-    at cluster scale pick S ≈ executor count; the per-task key slice
-    is N/S 8-byte ints (10^10/4096 ≈ 20 MB), not page payloads."""
-    proto = ShardedCuckooFilter.sized(capacity, n_shards)
-    n_buckets = proto.shards[0].n_buckets
-    ns = n_shards
+    """Distributed build: each shard is built by ONE task over its
+    co-routed keys and exactly S fixed-size blobs cross to the driver.
+    Shards are the parallelism unit — at cluster scale pick S ≈
+    executor count; the per-task key slice is N/S 8-byte ints
+    (10^10/4096 ≈ 20 MB), not page payloads."""
+    out = ShardedCuckooFilter.sized(capacity, n_shards)
+    n_buckets = out.shards[0].n_buckets
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _build(shard: int, keys: np.ndarray) -> CuckooFilter:
         f = CuckooFilter(np.zeros((n_buckets, SLOTS), dtype=np.uint16))
-        f.add(np.sort(pdf[hash_col].to_numpy()))
-        return pd.DataFrame({"shard": [key[0]], "blob": [f.to_bytes()]})
+        f.add(keys)
+        return f
 
-    from pyspark.sql import functions as F
-
-    shard_col = (
-        F.shiftrightunsigned(
-            F.col(hash_col).cast("long"), 64 - (ns.bit_length() - 1)
-        ).cast("int")
-        if ns > 1
-        else F.lit(0)
-    )
-    built = (
-        df.select(F.col(hash_col), shard_col.alias("_shard"))
-        .groupBy("_shard")
-        .applyInPandas(_build, "shard int, blob binary")
-        .toPandas()
-    )
-    out = ShardedCuckooFilter(
-        [
-            CuckooFilter(np.zeros((n_buckets, SLOTS), dtype=np.uint16))
-            for _ in range(ns)
-        ]
-    )
-    for _, row in built.iterrows():
-        out.shards[int(row["shard"])] = CuckooFilter.from_bytes(row["blob"])
+    for s, f in _per_shard(df, hash_col, n_shards, _build).items():
+        out.shards[s] = f
     return out

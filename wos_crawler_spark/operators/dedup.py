@@ -1,5 +1,6 @@
-"""URL-seen dedup: Bloom prefilter + exact anti-join rescue
-(SURVEY.md F1/J1/U3).
+"""URL-seen dedup: seen-sketch prefilter + exact anti-join rescue
+(SURVEY.md F1/J1/U3). The sketch is either flavor (Bloom or sharded
+cuckoo, operators/bloom.py) — this module only calls ``might_contain``.
 
 Semantics equal to the reference's ``RFPDupeFilter.request_seen`` set
 lookup, distributed:
@@ -35,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wos_crawler_spark.operators.bloom import AnyBloom, bloom_from_bytes
+from wos_crawler_spark.operators.bloom import SeenSketch, bloom_from_bytes
 
 
 def _rep_order():
@@ -72,9 +73,9 @@ _BLOOM_CACHE: dict[int, object] = {}
 _CACHE_TOKEN = 0
 
 
-def mark_maybe_seen(df: DataFrame, bloom: AnyBloom, hash_col: str = "url_hash") -> DataFrame:
-    """Attach boolean ``maybe_seen`` from the broadcast Bloom (either
-    flavor — monolithic or bank-sharded)."""
+def mark_maybe_seen(df: DataFrame, bloom: SeenSketch, hash_col: str = "url_hash") -> DataFrame:
+    """Attach boolean ``maybe_seen`` from the broadcast seen sketch
+    (deserialized once per task process, see ``_BLOOM_CACHE``)."""
     spark = df.sparkSession
     b = spark.sparkContext.broadcast(bloom.to_bytes())
     global _CACHE_TOKEN
@@ -98,7 +99,7 @@ def mark_maybe_seen(df: DataFrame, bloom: AnyBloom, hash_col: str = "url_hash") 
 def dedup_frontier(
     candidates: DataFrame,
     seen: DataFrame | None,
-    bloom: AnyBloom | None,
+    bloom: SeenSketch | None,
     hash_col: str = "url_hash",
     intra: bool = True,
 ) -> DataFrame:

@@ -795,6 +795,7 @@ def sample_frames_real(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     schema = (
         "asset_id long, frame_ts_ms long, frame_idx long, frame_payload binary"
     )
+    cols = ["asset_id", "frame_ts_ms", "frame_idx", "frame_payload"]
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -816,7 +817,8 @@ def sample_frames_real(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                         }
                     )
                     t += every_ms
-            yield pd.DataFrame(rows)
+            # explicit columns: a batch of zero-duration clips has no rows
+            yield pd.DataFrame(rows, columns=cols)
 
     return media.filter(F.col("kind") == "video").select(
         "asset_id", "payload"

@@ -15,17 +15,16 @@ Per wave K:
                ─ expand: hits ⋈ links → next candidates (depth+1, F8)
                ─ misses → retry rows (attempt+1 ≤ max_retries, F7)
     frontier_{K+1} = expansions ∪ retries (U1)
-    seen += this wave's scheduled url_hashes (U2); Bloom merged+rebroadcast
-    checkpoint(frontier, seen_delta, bloom, metrics) → atomic commit
+    seen += this wave's scheduled url_hashes (U2); seen sketch merged+rebroadcast
+    checkpoint(frontier, seen_delta, sketch, metrics) → atomic commit
 
-The driver holds only counters and the Bloom bytes — row data never
+The driver holds only counters and the seen-sketch bytes — row data never
 reaches the driver (no collect anywhere). Each wave's plan starts from
 a parquet read, so lineage stays O(1) in the wave count.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -35,12 +34,9 @@ from pyspark.sql import functions as F
 from wos_crawler_spark.functions.urlnorm import with_url_canon
 from wos_crawler_spark.operators import checkpoint as ckpt
 from wos_crawler_spark.operators.bloom import (
-    AnyBloom,
-    BankedBloomFilter,
-    BloomFilter,
+    SeenSketch,
     bloom_from_bytes,
-    build_banked_bloom,
-    build_bloom,
+    sized_sketch,
 )
 from wos_crawler_spark.operators.dedup import dedup_frontier
 from wos_crawler_spark.operators.parse_plaintext import parse_pages
@@ -72,15 +68,17 @@ class CrawlConfig:
     rows_per_bucket: int = 10_000  # politeness salt granularity
     bloom_capacity: int = 1_000_000
     bloom_fpp: float = 0.01
-    #: Bank-shard the URL-seen filter into B banks routed by the top
-    #: log2(B) hash bits (north_rule 10^10 layout: per-executor memory
-    #: and broadcast size drop to m/B; build/merge stay per-bank).
-    #: 1 = monolithic filter, identical bits to the banked B=1 case.
+    #: Banks of a fresh crawl's URL-seen sketch (Bloom banks or cuckoo
+    #: shards), routed by the top log2(B) hash bits (north_rule 10^10
+    #: layout: per-executor memory and broadcast size drop to 1/B;
+    #: build/merge stay per bank). 1 = one bit array / table. On
+    #: resume the checkpointed sketch's own bank count wins.
     bloom_banks: int = 1
-    #: URL-seen sketch flavor: "bloom" (OR-mergeable bit array) or
-    #: "cuckoo" (operators/cuckoo.py — supports DELETE for recrawl
-    #: eviction; merge folds by fingerprint re-insert). The north rule
-    #: names both. bloom_banks doubles as the cuckoo shard count.
+    #: Flavor of a fresh crawl's URL-seen sketch: "bloom" (OR-mergeable
+    #: bit array) or "cuckoo" (operators/cuckoo.py — supports DELETE
+    #: for recrawl eviction; merge folds by fingerprint re-insert). The
+    #: north rule names both. On resume the checkpointed sketch's own
+    #: flavor wins (operators/bloom.py picks it from the bytes).
     seen_filter: str = "bloom"
     #: Use the Bloom as a pre-shuffle filter inside dedup (F1). The
     #: filter itself is ALWAYS built, merged and checkpointed per wave
@@ -214,6 +212,10 @@ class WaveResult:
     parsed_docs: int
     next_start_ts: float
     fetched: DataFrame | None = None
+    #: ``fetched`` column that is non-null exactly for a hit: the fetch
+    #: side's ``_page_hit`` marker (prepare_fetch_side adds it), or a
+    #: data column when run_wave is given a raw pages frame
+    hit_col: str = "_page_hit"
     parsed: DataFrame | None = None
     candidates: DataFrame | None = None  # cached; unpersisted post-ckpt
     part_metrics: DataFrame | None = None  # lazy per-partition counters
@@ -587,7 +589,7 @@ def run_wave(
     links: DataFrame | None,
     robots: DataFrame | None,
     seen: DataFrame | None,
-    bloom: AnyBloom | None,
+    bloom: SeenSketch | None,
     cfg: CrawlConfig,
     wave_start: float,
     host_delays: DataFrame | None = None,
@@ -603,13 +605,6 @@ def run_wave(
     host_delays, salt counts) carry broadcast hints — run_crawl sizes
     them against cfg.dim_broadcast_threshold and passes the verdict;
     semantics are identical either way."""
-    timing = os.environ.get("WCS_TIMING", "") not in ("", "0")
-
-    def _t(label: str, t0: float) -> None:
-        if timing:
-            print(f"[crawl-timing]   {label}: {time.time() - t0:.2f}s", flush=True)
-
-    t0 = time.time()
     # F3: robots gate (map-only broadcast LPM / RFC-9309 wildcards)
     allowed = robots_filter(
         frontier, robots, wildcards=cfg.robots_wildcards,
@@ -725,15 +720,10 @@ def run_wave(
     # count/aggregate below reads the cache, so the robots→dedup→
     # schedule→fetch chain executes exactly once per wave. pages is
     # pre-partitioned on url (prepare_fetch_side) → only sched shuffles.
-    # hit/miss probe: the join-side marker (always non-null for an
-    # existing page — prepare_fetch_side adds it); data-column
-    # fallbacks only for callers passing a raw pages frame.
-    if "_page_hit" in pages.columns:
-        probe = "_page_hit"
-    elif "text" in pages.columns:
-        probe = "text"
-    else:
-        probe = "warc_ts"
+    # hit/miss probe: see WaveResult.hit_col
+    probe = next(
+        (c for c in ("_page_hit", "text") if c in pages.columns), "warc_ts"
+    )
     fetched = sched.join(pages, "url", "left").cache()
     hits = fetched.filter(F.col(probe).isNotNull())
     misses = fetched.filter(F.col(probe).isNull())
@@ -793,8 +783,6 @@ def run_wave(
     # the inter-wave spacing stays conservative for every host.
     gap = cfg.delay_s if inter_wave_gap_s is None else inter_wave_gap_s
     next_start = (max_ts_row + gap) if max_ts_row is not None else wave_start
-    _t("fetch-agg job", t0)
-    t0 = time.time()
 
     # quota overflow re-queues (the scheduler keeps its pending queue —
     # the reference never drops requests, it pops them later). The
@@ -869,9 +857,8 @@ def run_wave(
     # next frontier materializes (checkpoint) — no extra jobs here.
 
     # U2/A2: seen accumulates everything scheduled this wave. The
-    # Bloom build over this delta happens in run_crawl, overlapped
+    # sketch build over this delta happens in run_crawl, overlapped
     # with the checkpoint jobs.
-    _t("retry/expand/overflow plan", t0)
     seen_delta = fetched.select("url_hash").withColumn("wave", F.lit(wave))
     res = WaveResult(
         wave=wave,
@@ -883,6 +870,7 @@ def run_wave(
         parsed_docs=parsed_n,
         next_start_ts=next_start,
         fetched=fetched,
+        hit_col=probe,
         parsed=parsed,
         candidates=candidates,
         part_metrics=part_metrics,
@@ -954,7 +942,7 @@ def run_crawl(
     start_wave = 0
     frontier = None
     seen: DataFrame | None = None
-    bloom: AnyBloom | None = None
+    sketch: SeenSketch | None = None
     wave_start = 0.0
     hit_log: DataFrame | None = None  # opic_priority: cumulative hits
 
@@ -965,24 +953,22 @@ def run_crawl(
             start_wave = last + 1
             frontier = ckpt.read_frontier(spark, cfg.ckpt_dir, last)
             seen = ckpt.read_seen(spark, cfg.ckpt_dir, last)
-            bloom = bloom_from_bytes(ckpt.read_bloom_bytes(cfg.ckpt_dir, last))
+            # the checkpointed sketch's flavor and bank count win over cfg
+            sketch = bloom_from_bytes(ckpt.read_bloom_bytes(cfg.ckpt_dir, last))
             wave_start = ckpt.read_metrics(cfg.ckpt_dir, last)["next_start_ts"]
             if cfg.backoff:
                 # backoff policy is a pure function of cumulative host
                 # stats — restoring them makes resume ≡ uninterrupted
                 # for backoff crawls too (parity-tested)
                 host_stats = ckpt.read_host_stats(spark, cfg.ckpt_dir, last)
-
-    timing = os.environ.get("WCS_TIMING", "") not in ("", "0")
-
-    def _t(label: str, t0: float) -> None:
-        if timing:
-            print(f"[crawl-timing] {label}: {time.time() - t0:.2f}s", flush=True)
+    if sketch is None:
+        sketch = sized_sketch(
+            cfg.seen_filter, cfg.bloom_capacity, cfg.bloom_fpp, cfg.bloom_banks
+        )
 
     # one-time layout work (production: Iceberg bucket(url)/bucket(src_url)
     # table specs make these free — see prepare_fetch_side docstring)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    t0 = time.time()
     own_layout = pages_fetch is None
     pages_kv = (
         pages_fetch
@@ -1024,7 +1010,6 @@ def run_crawl(
     # would run twice (emptiness probe + first candidate use)
     frontier = frontier.localCheckpoint()
     frontier_n = frontier.count()
-    _t("prep+init", t0)
 
     fetch_logs = []
     parsed_frames = []
@@ -1081,7 +1066,7 @@ def run_crawl(
             ).drop("_sched_dom")
             eff_delays = bo.select("host", "crawl_delay")
         res, next_frontier, seen_delta = run_wave(
-            spark, wave, frontier, pages_kv, links_kv, robots, seen, bloom,
+            spark, wave, frontier, pages_kv, links_kv, robots, seen, sketch,
             cfg, wave_start,
             host_delays=eff_delays, inter_wave_gap_s=eff_gap,
             rmap=rmap, broadcast_dims=wave_bcast,
@@ -1114,11 +1099,8 @@ def run_crawl(
             # Runs BEFORE the frontier checkpoint so the committed
             # frontier carries the new priorities; res.fetched is
             # still cached, so the hits scan is a cache read.
-            _probe = "_page_hit" if "_page_hit" in res.fetched.columns else (
-                "text" if "text" in res.fetched.columns else "warc_ts"
-            )
             wave_hits = res.fetched.filter(
-                F.col(_probe).isNotNull()
+                F.col(res.hit_col).isNotNull()
             ).select("url", "url_canon")
             hit_log = (
                 wave_hits
@@ -1159,9 +1141,6 @@ def run_crawl(
         if cfg.backoff:
             from wos_crawler_spark.operators.backoff import fold_host_stats
 
-            probe = "_page_hit" if "_page_hit" in res.fetched.columns else (
-                "text" if "text" in res.fetched.columns else "warc_ts"
-            )
             wave_src = res.fetched
             if cfg.politeness_domain:
                 wave_src = (
@@ -1169,7 +1148,7 @@ def run_crawl(
                     .withColumn("host", F.col("_sched_dom"))
                     .drop("_sched_dom")
                 )
-            host_stats = fold_host_stats(host_stats, wave_src, probe)
+            host_stats = fold_host_stats(host_stats, wave_src, res.hit_col)
             if cfg.ckpt_dir:
                 # persist with the wave (before its _COMMITTED marker)
                 # and re-read — durability AND lineage truncation
@@ -1192,79 +1171,22 @@ def run_crawl(
                 parsed_frames.append(res.parsed)
         wave_start = res.next_start_ts
 
-        def _build_wave_bloom() -> AnyBloom:
-            """A2: per-partition Bloom partials over this wave's delta,
-            OR-folded executor-side, folded into the cross-wave filter.
-            bloom_banks > 1 shards build/merge/broadcast per bank.
-
-            On RESUME the checkpointed filter is authoritative for the
-            flavor (its banks are already baked into its bit layout);
-            a cfg that disagrees in bank count gets the checkpoint's
-            flavor, and a cfg whose capacity/fpp produce a different
-            bit shape is a hard error — silently merging mismatched
-            filters would corrupt the seen sketch."""
-            if cfg.seen_filter == "cuckoo" or (
-                bloom is not None and bloom.shape[0] == "cuckoo"
-            ):
-                from wos_crawler_spark.operators.cuckoo import (
-                    ShardedCuckooFilter,
-                    build_sharded_cuckoo,
-                )
-
-                shards = (
-                    bloom.shape[1] if bloom is not None else cfg.bloom_banks
-                )
-                if not res.scheduled:
-                    return bloom if bloom is not None else (
-                        ShardedCuckooFilter.sized(cfg.bloom_capacity, shards)
-                    )
-                wave_ck = build_sharded_cuckoo(
-                    seen_delta, "url_hash",
-                    capacity=cfg.bloom_capacity, n_shards=shards,
-                )
-                if bloom is not None and bloom.shape != wave_ck.shape:
-                    raise ValueError(
-                        f"resumed cuckoo shape {bloom.shape} incompatible "
-                        f"with cfg bloom_capacity={cfg.bloom_capacity}/"
-                        f"bloom_banks={cfg.bloom_banks} → {wave_ck.shape}; "
-                        f"resume with the original filter config"
-                    )
-                return bloom.merge(wave_ck) if bloom is not None else wave_ck
-            banks = (
-                bloom.shape[0] if bloom is not None else cfg.bloom_banks
-            )
+        def _fold_sketch() -> SeenSketch:
+            """A2: build this wave's seen delta into a sketch of the
+            crawl's flavor and bank count (the checkpoint's on resume),
+            then fold it in; a cfg capacity/fpp that gives another
+            shape is a hard error."""
             if not res.scheduled:
-                if bloom is not None:
-                    return bloom
-                if banks > 1:
-                    return BankedBloomFilter.sized(
-                        cfg.bloom_capacity, cfg.bloom_fpp, banks
-                    )
-                return BloomFilter.sized(cfg.bloom_capacity, cfg.bloom_fpp)
-            if banks > 1:
-                wave_bloom = build_banked_bloom(
-                    seen_delta, "url_hash",
-                    capacity=cfg.bloom_capacity, fpp=cfg.bloom_fpp,
-                    n_banks=banks,
+                return sketch
+            return sketch.merge(
+                sketch.build_like(
+                    seen_delta, "url_hash", cfg.bloom_capacity, cfg.bloom_fpp
                 )
-            else:
-                wave_bloom = build_bloom(
-                    seen_delta, "url_hash",
-                    capacity=cfg.bloom_capacity, fpp=cfg.bloom_fpp,
-                )
-            if bloom is not None and bloom.shape != wave_bloom.shape:
-                raise ValueError(
-                    f"resumed Bloom shape {bloom.shape} (banks, bits/bank, "
-                    f"k) is incompatible with cfg bloom_capacity="
-                    f"{cfg.bloom_capacity}/fpp={cfg.bloom_fpp} → "
-                    f"{wave_bloom.shape}; resume with the original Bloom "
-                    f"config"
-                )
-            return bloom.merge(wave_bloom) if bloom is not None else wave_bloom
+            )
 
         # Final wave (no checkpointing): the loop cannot continue, so
         # materializing the next frontier, re-laying-out seen for a
-        # future anti-join, and folding the Bloom are pure throwaway
+        # future anti-join, and folding the sketch are pure throwaway
         # work — measured at >50% of the final wave's wall time at 6M
         # URLs. seen stays a lazy union (consumers force it on
         # demand); retried/expanded stay -1 (unknown without running
@@ -1274,9 +1196,9 @@ def run_crawl(
         is_final = wave == cfg.max_waves - 1 and not cfg.ckpt_dir
 
         if cfg.ckpt_dir:
-            bloom = _build_wave_bloom()
+            sketch = _fold_sketch()
             ckpt.commit_wave(
-                cfg.ckpt_dir, wave, next_frontier, seen_delta, bloom.to_bytes(),
+                cfg.ckpt_dir, wave, next_frontier, seen_delta, sketch.to_bytes(),
                 metrics=None,  # committed below, after counts
                 part_metrics=res.part_metrics,
             )
@@ -1290,9 +1212,8 @@ def run_crawl(
             frontier = None
             nf_n, retried_n = 0, None
         else:
-            t_ck = time.time()
             # Three independent materialization jobs close the wave:
-            # (A) Bloom partial-build over the delta, (B) seen
+            # (A) sketch partial-build over the delta, (B) seen
             # accumulate + lineage truncation, (C) next-frontier
             # truncation (+ piggybacked metrics via observe — no
             # separate count job). All three read only the wave's
@@ -1332,15 +1253,6 @@ def run_crawl(
                 ).localCheckpoint()
                 return fr, obs.get["n"], obs.get["retried"]
 
-            def _timed(name, fn):
-                def _run():
-                    ts = time.time()
-                    try:
-                        return fn()
-                    finally:
-                        _t(f"    tail job {name}", ts)
-                return _run
-
             # Backoff's lazy host_stats localCheckpoint must
             # materialize WHILE res.fetched is still cached: deferring
             # to the next wave's backoff_plan jobs (its first natural
@@ -1355,20 +1267,17 @@ def run_crawl(
                 else None
             )
             with ThreadPoolExecutor(max_workers=4) as pool:
-                f_bloom = pool.submit(_timed("bloom", _build_wave_bloom))
-                f_seen = pool.submit(_timed("seen", _seen_job))
-                f_frontier = pool.submit(_timed("frontier", _frontier_job))
+                f_sketch = pool.submit(_fold_sketch)
+                f_seen = pool.submit(_seen_job)
+                f_frontier = pool.submit(_frontier_job)
                 f_hs = (
-                    pool.submit(_timed("host_stats", hs_force.count))
-                    if hs_force is not None
-                    else None
+                    pool.submit(hs_force.count) if hs_force is not None else None
                 )
-                bloom = f_bloom.result()
+                sketch = f_sketch.result()
                 seen = f_seen.result()
                 frontier, nf_n, retried_n = f_frontier.result()
                 if f_hs is not None:
                     f_hs.result()
-            _t("  bloom+seen+frontier ckpt (parallel)", t_ck)
 
         if cfg.ckpt_dir:
             # the parquet write materialized the frontier; one cheap
@@ -1380,7 +1289,7 @@ def run_crawl(
         if bo is not None:
             # the wave's backoff dim is fully consumed (quarantine
             # anti-join, eff_delays, max_eff) once the frontier/seen/
-            # bloom tail jobs above have materialized — release it so
+            # sketch tail jobs above have materialized — release it so
             # cached dims don't accumulate one-per-wave on long crawls
             bo.unpersist()
         if res.candidates is not None:
@@ -1396,7 +1305,6 @@ def run_crawl(
             res.retried = int(retried_n or 0)
             res.expanded = int(nf_n) - res.retried
         res.wall_s = time.time() - t_wave
-        _t(f"wave {wave} (sched={res.scheduled})", t_wave)
 
         if cfg.ckpt_dir:
             ckpt.write_metrics(

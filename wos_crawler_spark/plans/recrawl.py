@@ -19,11 +19,11 @@ blobs the probe path already ships):
    * seen: expired keys recorded in ``seen_evict/`` (CDC-merged by
      ``checkpoint.read_seen``; the production twin is an Iceberg
      MERGE DELETE on the seen table),
-   * sketch: cuckoo flavor deletes the keys in place, distributed
-     per shard (``operators/cuckoo.evict_sharded_cuckoo``); Bloom
-     flavor cannot delete, so it REBUILDS from the surviving seen set
-     (one distributed banked build — the cost the cuckoo flavor
-     avoids),
+   * sketch: ``evict`` on the checkpointed sketch — the cuckoo
+     flavor deletes the keys in place, distributed per shard
+     (``operators/cuckoo.evict_sharded_cuckoo``); the Bloom flavor
+     cannot delete, so it REBUILDS from the surviving seen set (one
+     distributed build — the cost the cuckoo flavor avoids),
    * frontier: the expired URLs re-enter the frontier with
      ``lineage='recrawl:<reason>'`` and depth 0.
 3. ``run_crawl(resume=True)`` then re-fetches exactly the evicted
@@ -38,18 +38,7 @@ from pyspark.sql import functions as F
 
 from wos_crawler_spark.functions.urlnorm import with_url_canon
 from wos_crawler_spark.operators import checkpoint as ckpt
-from wos_crawler_spark.operators.bloom import (
-    BankedBloomFilter,
-    BloomFilter,
-    bloom_from_bytes,
-    build_banked_bloom,
-    build_bloom,
-)
-from wos_crawler_spark.operators.cuckoo import (
-    CuckooFilter,
-    ShardedCuckooFilter,
-    evict_sharded_cuckoo,
-)
+from wos_crawler_spark.operators.bloom import bloom_from_bytes
 from wos_crawler_spark.plans.crawl import FRONTIER_COLS, CrawlConfig
 
 
@@ -112,32 +101,9 @@ def evict_for_recrawl(
     n_evict = exp.count()
 
     if n_evict:
-        keys = exp.select("url_hash")
-        if isinstance(filt, ShardedCuckooFilter):
-            filt = evict_sharded_cuckoo(filt, keys)
-        elif isinstance(filt, CuckooFilter):
-            filt = evict_sharded_cuckoo(ShardedCuckooFilter([filt]), keys).shards[0]
-        else:
-            # Bloom flavors: no deletion — rebuild from the surviving
-            # seen set at the SAME shape (a full distributed build;
-            # the cuckoo flavor's delete is O(evicted) instead).
-            survivors = seen.join(keys, "url_hash", "left_anti")
-            if isinstance(filt, BankedBloomFilter):
-                rebuilt = build_banked_bloom(
-                    survivors, "url_hash", cfg.bloom_capacity,
-                    cfg.bloom_fpp, filt.shape[0],
-                )
-            else:
-                assert isinstance(filt, BloomFilter)
-                rebuilt = build_bloom(
-                    survivors, "url_hash", cfg.bloom_capacity, cfg.bloom_fpp
-                )
-            if rebuilt.shape != filt.shape:
-                raise ValueError(
-                    f"rebuilt Bloom shape {rebuilt.shape} != checkpointed "
-                    f"{filt.shape}; evict with the original filter config"
-                )
-            filt = rebuilt
+        filt = filt.evict(
+            exp.select("url_hash"), seen, cfg.bloom_capacity, cfg.bloom_fpp
+        )
 
     readmit = (
         exp.withColumn("priority", F.lit(priority))

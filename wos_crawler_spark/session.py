@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half of physical RAM, between
+    1 and 48 GB. In local mode the driver JVM is the whole cluster, so
+    a fixed large heap on a small box lets it grow until the kernel
+    OOM-kills it; the other half is left to the Python workers.
+    ``phys_bytes`` defaults to the RAM of the host running the driver."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "wos_crawler_spark",
     cores: int | None = None,
@@ -23,6 +34,8 @@ def get_spark(
     ``cores``: local[N] parallelism; defaults to $SPARK_GRAFT_CPUS or all.
     ``shuffle_partitions`` defaults to the core count — at cluster scale
     this would be ~2-3x total executor cores instead.
+    The driver heap is $SPARK_GRAFT_DRIVER_MEM, else ``driver_memory()``;
+    ``extra_conf`` entries override every setting here.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
@@ -45,7 +58,10 @@ def get_spark(
         # duplicates would violate the per-host rate contract (SURVEY §4).
         .config("spark.speculation", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():
