@@ -3,6 +3,7 @@ checkpoint → identical final seen set + metrics continuity vs an
 uninterrupted run."""
 
 import os
+import shutil
 
 import pytest
 
@@ -164,3 +165,105 @@ def test_resume_adopts_checkpointed_flavor(spark, tmp_path, ckpt_flavor, cfg_fla
         r["url_hash"] for r in ckpt.read_seen(spark, part_dir, 2).collect()
     }
     assert seen_full == seen_part
+
+
+@pytest.mark.parametrize("flavor", ["bloom", "cuckoo"])
+def test_resume_matrix_every_gate(spark, tmp_path, flavor):
+    """Resume equivalence with every gate on (backoff, PSL-keyed
+    politeness_domain, trap guard, URL gate, OPIC priority): a 4-wave
+    crawl stopped after wave 1 or after wave 2 and then resumed
+    commits the same per-wave seen deltas, metrics.json and final
+    host_stats as the uninterrupted run — every cross-wave state
+    (frontier, seen, sketch, host_stats, OPIC hit log) survives the
+    restart."""
+    from wos_crawler_spark.fixtures import wosgen
+    from wos_crawler_spark.operators.blocklist import DEFAULT_PUBLIC_SUFFIXES
+
+    # a wider world than _world's: 4 waves of frontier pressure, so
+    # OPIC's priorities decide which urls the per-host quota admits
+    n = 150
+    pages = pages_table(spark, n, partitions=4).cache()
+    seeds, robots = seeds_table(spark), robots_table(spark)
+    extra = [
+        (wosgen.url_of(i), f"https://dead.example.org/p{i}")
+        for i in range(0, n, 2)
+    ] + [
+        (wosgen.url_of(i), f"https://{wosgen.host_of(i)}/img/banner{i}.png")
+        for i in range(0, n, 3)
+    ]
+    links = links_table(spark, n).unionByName(
+        spark.createDataFrame(extra, "src_url string, dst_url string")
+    )
+    common = dict(
+        delay_s=1.0, quota=4, max_depth=3, rows_per_bucket=8, parse=False,
+        seen_filter=flavor, backoff=True,
+        backoff_kwargs=dict(min_fetches=3, err_pct=25, factor=3,
+                            quarantine_pct=90),
+        politeness_domain=True,
+        psl_rules=tuple(DEFAULT_PUBLIC_SUFFIXES) + ("*.example.org",),
+        trap_cap=30,
+        url_gate=True, url_gate_kwargs={"max_digit_num": 1, "max_digit_den": 1},
+        opic_priority=True, opic_iters=1,
+    )
+
+    def committed(d):
+        waves = range(ckpt.latest_wave(d) + 1)
+        deltas = [
+            sorted(r.url_hash for r in spark.read.parquet(
+                os.path.join(ckpt.wave_dir(d, w), "seen_delta")).collect())
+            for w in waves
+        ]
+        metrics = [ckpt.read_metrics(d, w) for w in waves]
+        stats = sorted(
+            ckpt.read_host_stats(spark, d, waves[-1]).collect()
+        )
+        return deltas, metrics, stats
+
+    full_dir = str(tmp_path / "full")
+    run_crawl(spark, pages, seeds, links, robots,
+              CrawlConfig(max_waves=4, ckpt_dir=full_dir, **common))
+    want = committed(full_dir)
+    assert len(want[0]) == 4 and all(want[0])
+    # backoff bit: the dead host crossed the quarantine threshold
+    assert any(r.host == "dead.example.org" and r.miss * 100 >= 90 * r.sched
+               for r in want[2])
+
+    for stop in (1, 2):
+        # the crawl killed after committing wave `stop`: the committed
+        # waves 0..stop of the uninterrupted run
+        d = str(tmp_path / f"stop{stop}")
+        shutil.copytree(full_dir, d)
+        for w in range(stop + 1, 4):
+            shutil.rmtree(ckpt.wave_dir(d, w))
+        resumed = run_crawl(
+            spark, pages, seeds, links, robots,
+            CrawlConfig(max_waves=4, ckpt_dir=d, **common), resume=True,
+        )
+        assert resumed.waves[0].wave == stop + 1
+        deltas, metrics, stats = committed(d)
+        assert deltas == want[0], f"seen deltas differ, resumed after wave {stop}"
+        assert metrics == want[1], f"metrics differ, resumed after wave {stop}"
+        assert stats == want[2], f"host_stats differ, resumed after wave {stop}"
+
+
+def test_persistent_rdds_flat_in_wave_count(spark):
+    """With backoff and OPIC on, no checkpoint dir and wave caches
+    released, each wave's tail releases what its states supersede
+    (and opic_int its own checkpoints): the crawl leaves as many
+    persistent RDDs after 6 waves as after 2."""
+    pages, seeds, links, robots = _world(spark)
+    jsc = spark.sparkContext._jsc
+
+    def leftover(max_waves):
+        before = set(jsc.getPersistentRDDs().keySet())
+        res = run_crawl(
+            spark, pages, seeds, links, robots,
+            CrawlConfig(delay_s=1.0, quota=4, max_depth=6, rows_per_bucket=8,
+                        parse=False, backoff=True, opic_priority=True,
+                        opic_iters=1, keep_wave_caches=False,
+                        max_waves=max_waves),
+        )
+        assert len(res.waves) == max_waves
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    assert leftover(2) == leftover(6)

@@ -163,3 +163,33 @@ def test_full_crawl_parity_with_gate_forced(spark):
     assert len(engine_order) > 10
     assert engine_order == sim.fetch_order
     assert {r["url_hash"] for r in eng.seen.collect()} == sim.seen
+
+
+def test_duplicate_delay_rows_stay_broadcast(spark, no_auto_bhj):
+    """run_crawl sizes the host_delays dim by DISTINCT hosts, like the
+    robots dim: a dim listing every host three times stays broadcast
+    while its hosts fit dim_broadcast_threshold, and only a threshold
+    below the host count drops the hints."""
+    from wos_crawler_spark.fixtures.synth import pages_table, seeds_table
+    from wos_crawler_spark.functions.urlnorm import with_url_canon
+    from wos_crawler_spark.plans.crawl import CrawlConfig, run_crawl
+
+    pages = pages_table(spark, 40, partitions=2)
+    hosts = [
+        r.host for r in
+        with_url_canon(pages.select("url")).select("host").distinct().collect()
+    ]
+    delays = spark.createDataFrame(
+        [(h, 2.0) for h in hosts] * 3, "host string, crawl_delay double"
+    )
+
+    def fetch_plan(threshold):
+        res = run_crawl(
+            spark, pages, seeds_table(spark), host_delays=delays,
+            cfg=CrawlConfig(max_waves=1, parse=False,
+                            dim_broadcast_threshold=threshold),
+        )
+        return _plan(res.waves[0].fetched)
+
+    assert "BroadcastExchange" in fetch_plan(len(hosts))
+    assert "BroadcastExchange" not in fetch_plan(len(hosts) - 1)

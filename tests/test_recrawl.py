@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from wos_crawler_spark.fixtures import wosgen
 from wos_crawler_spark.fixtures.synth import (
     links_table,
     pages_table,
@@ -68,15 +69,41 @@ def world(spark):
     )
 
 
-@pytest.mark.parametrize("flavor", ["cuckoo", "bloom"])
-def test_eviction_readmits_exactly_the_expired(spark, world, tmp_path, flavor):
+DEAD_HOST = "dead.example.org"
+BACKOFF = dict(
+    backoff=True,
+    backoff_kwargs=dict(min_fetches=3, err_pct=25, factor=3, quarantine_pct=90),
+)
+
+
+@pytest.mark.parametrize(
+    "flavor, extra",
+    [
+        pytest.param("cuckoo", {}, id="cuckoo"),
+        pytest.param("bloom", {}, id="bloom"),
+        pytest.param("cuckoo", BACKOFF, id="cuckoo-backoff"),
+    ],
+)
+def test_eviction_readmits_exactly_the_expired(
+    spark, world, tmp_path, flavor, extra
+):
+    """Eviction re-admits exactly the expired urls. With backoff (its
+    crawl also links every even page to a dead host) the eviction wave
+    carries host_stats forward unchanged, so the dead host quarantined
+    before the eviction stays quarantined in the resumed waves."""
     d = str(tmp_path / flavor)
-    run_crawl(
-        spark, world["pages"], world["seeds"], world["links"],
-        world["robots"],
-        CrawlConfig(ckpt_dir=d, seen_filter=flavor, **CFG),
-    )
+    links = world["links"]
+    if extra:
+        links = links.unionByName(spark.createDataFrame(
+            [(wosgen.url_of(i), f"https://{DEAD_HOST}/p{i}")
+             for i in range(0, N, 2)],
+            "src_url string, dst_url string",
+        ))
+    cfg = CrawlConfig(ckpt_dir=d, seen_filter=flavor, **CFG, **extra)
+    run_crawl(spark, world["pages"], world["seeds"], links, world["robots"], cfg)
     last = ckpt.latest_wave(d)
+    if extra:
+        stats_before = sorted(ckpt.read_host_stats(spark, d, last).collect())
     fetched = sorted(
         r["url_hash"]
         for r in ckpt.read_seen(spark, d, last).select("url_hash").collect()
@@ -88,9 +115,17 @@ def test_eviction_readmits_exactly_the_expired(spark, world, tmp_path, flavor):
         .select("url")
     )
     m = evict_for_recrawl(
-        spark, d, expired, CrawlConfig(seen_filter=flavor, **CFG)
+        spark, d, expired, CrawlConfig(seen_filter=flavor, **CFG, **extra)
     )
     assert m["evicted"] == len(evict_hashes)
+    if extra:
+        after = ckpt.read_host_stats(spark, d, ckpt.latest_wave(d))
+        assert sorted(after.collect()) == stats_before
+        # quarantined before the eviction: min_fetches reached, miss
+        # rate over quarantine_pct
+        dead = [r for r in stats_before if r.host == DEAD_HOST]
+        assert dead and dead[0].sched >= 3
+        assert dead[0].miss * 100 >= 90 * dead[0].sched
 
     # seen now excludes exactly the evicted keys
     seen1 = {
@@ -113,13 +148,16 @@ def test_eviction_readmits_exactly_the_expired(spark, world, tmp_path, flavor):
     # resume: the next waves re-fetch exactly the evicted urls (more
     # than one wave when per-host quota spreads the readmissions out)
     res = run_crawl(
-        spark, world["pages"], world["seeds"], world["links"],
-        world["robots"],
+        spark, world["pages"], world["seeds"], links, world["robots"],
         CrawlConfig(ckpt_dir=d, seen_filter=flavor,
-                    **{**CFG, "max_waves": ckpt.latest_wave(d) + 5}),
+                    **{**CFG, "max_waves": ckpt.latest_wave(d) + 5}, **extra),
         resume=True,
     )
     ev_wave = m["wave"]
+    if extra:
+        # the dead host stays cut off although the re-fetched pages
+        # link to it again
+        assert res.fetch_log.filter(F.col("host") == DEAD_HOST).count() == 0
     resumed = {
         r["url_hash"]
         for r in res.fetch_log.filter(F.col("wave") > ev_wave)

@@ -6,7 +6,9 @@ Reference behavior: Scrapy persists its request queue + dupefilter
 only when ``JOBDIR`` is set (``dep:scrapy.dupefilters::RFPDupeFilter``
 spills ``requests.seen``; ``dep:scrapy.core.scheduler::Scheduler``
 spills the pending queue) and resumes mid-crawl from that directory.
-The Spark twin checkpoints (frontier, seen, bloom, metrics) per wave.
+The Spark twin checkpoints every cross-wave state of the crawl per
+wave: frontier, seen, seen sketch, backoff host stats and the OPIC
+hit log.
 
 Layout (parquet stands in for Iceberg snapshots — jars absent in this
 sandbox; in production each wave is one Iceberg snapshot and resume is
@@ -16,13 +18,26 @@ time-travel to the last committed one):
       wave=K/
         frontier/            parquet — the NEXT wave's pending frontier
         seen_delta/          parquet — url_hashes first seen this wave
+        seen_evict/          parquet — url_hashes an eviction wave
+                             expired (plans/recrawl.py only)
+        host_stats/          parquet — cumulative backoff counters
+                             (host, sched, miss) (backoff only)
+        hit_delta/           parquet — (url, url_canon) of this wave's
+                             hits; the OPIC hit log is the union of
+                             every wave's delta (opic_priority only)
         partition_metrics/   parquet — per-partition counters + lineage
                              (partition_id, scheduled, hits, misses,
                               parsed_docs, from_seed, from_link,
                               from_retry, payload_bytes)
-        bloom.bin            merged Bloom bytes
+        bloom.bin            merged seen-sketch bytes
         metrics.json         wave counters + next_start_ts + lineage
         _COMMITTED           empty marker, written LAST (atomicity)
+
+Resume reads back exactly these states: ``read_frontier``,
+``read_seen``, ``read_bloom_bytes``, ``read_host_stats`` and
+``read_hit_log``. A checkpoint without ``host_stats/`` or
+``hit_delta/`` (a crawl without backoff or OPIC, or one written before
+the hit log was checkpointed) resumes with that state empty.
 
 Writing the marker last makes a torn checkpoint invisible to resume:
 ``latest_wave`` only ever returns fully-committed waves, and the wave
@@ -60,17 +75,50 @@ def commit_wave(
     invisible to resume until then. ``part_metrics`` persists the
     per-partition counter+lineage frame (north_rule: "per-partition
     lineage + metrics") — one map-side agg job over the wave's cache."""
-    d = wave_dir(ckpt_dir, wave)
-    frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
-    seen_delta.write.mode("overwrite").parquet(os.path.join(d, "seen_delta"))
-    if part_metrics is not None:
-        part_metrics.write.mode("overwrite").parquet(
-            os.path.join(d, "partition_metrics")
-        )
-    with open(os.path.join(d, "bloom.bin"), "wb") as f:
-        f.write(bloom_bytes)
+    for name, df in (
+        ("frontier", frontier),
+        ("seen_delta", seen_delta),
+        ("partition_metrics", part_metrics),
+    ):
+        if df is not None:
+            write_frame(ckpt_dir, wave, name, df)
+    write_bloom_bytes(ckpt_dir, wave, bloom_bytes)
     if metrics is not None:
         write_metrics(ckpt_dir, wave, metrics)
+
+
+def write_frame(ckpt_dir: str, wave: int, name: str, df: DataFrame) -> None:
+    """Write the wave's ``name/`` parquet artifact."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(wave_dir(ckpt_dir, wave), name)
+    )
+
+
+def read_frame(
+    spark: SparkSession, ckpt_dir: str, wave: int, name: str
+) -> DataFrame | None:
+    """The wave's ``name/`` parquet artifact, or None when it has none."""
+    p = os.path.join(wave_dir(ckpt_dir, wave), name)
+    return spark.read.parquet(p) if os.path.isdir(p) else None
+
+
+def write_bloom_bytes(ckpt_dir: str, wave: int, bloom_bytes: bytes) -> None:
+    d = wave_dir(ckpt_dir, wave)
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, "bloom.bin"), "wb") as f:
+        f.write(bloom_bytes)
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks ``df`` holds: its cache, and every
+    localCheckpoint its plan reads (``DataFrame.unpersist`` does not
+    reach those). Only for a frame nothing will read again."""
+    df.unpersist()
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def write_metrics(ckpt_dir: str, wave: int, metrics: dict) -> None:
@@ -82,17 +130,31 @@ def write_metrics(ckpt_dir: str, wave: int, metrics: dict) -> None:
         f.write("")
 
 
+def _committed(ckpt_dir: str, kind: str) -> list[int]:
+    """K of every ``{kind}=K`` dir under ckpt_dir with a _COMMITTED
+    marker."""
+    if not os.path.isdir(ckpt_dir):
+        return []
+    return [
+        int(m.group(1))
+        for name in os.listdir(ckpt_dir)
+        if (m := re.fullmatch(rf"{kind}=(\d+)", name)) is not None
+        and os.path.exists(os.path.join(ckpt_dir, name, "_COMMITTED"))
+    ]
+
+
 def latest_wave(ckpt_dir: str) -> int | None:
     """Highest wave K with a _COMMITTED marker, or None."""
-    if not os.path.isdir(ckpt_dir):
-        return None
-    waves = []
-    for name in os.listdir(ckpt_dir):
-        if name.startswith("wave=") and os.path.exists(
-            os.path.join(ckpt_dir, name, "_COMMITTED")
-        ):
-            waves.append(int(name.split("=", 1)[1]))
-    return max(waves) if waves else None
+    return max(_committed(ckpt_dir, "wave"), default=None)
+
+
+def _artifact_paths(ckpt_dir: str, waves, name: str) -> list[str]:
+    """Paths of the ``name/`` artifacts that ``waves`` have."""
+    return [
+        p
+        for w in waves
+        if os.path.isdir(p := os.path.join(wave_dir(ckpt_dir, w), name))
+    ]
 
 
 def read_frontier(spark: SparkSession, ckpt_dir: str, wave: int) -> DataFrame:
@@ -111,17 +173,17 @@ def commit_eviction(
     carries the re-admitted URLs, ``seen_evict/`` records the expired
     url_hashes (the production twin is an Iceberg MERGE DELETE on the
     seen table), ``seen_delta/`` is empty (nothing was fetched), and
-    ``bloom.bin`` holds the post-eviction filter. Marker written LAST,
-    same atomicity as a fetch wave."""
-    d = wave_dir(ckpt_dir, wave)
-    frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
-    evicted.write.mode("overwrite").parquet(os.path.join(d, "seen_evict"))
-    evicted.limit(0).write.mode("overwrite").parquet(
-        os.path.join(d, "seen_delta")
+    ``bloom.bin`` holds the post-eviction filter. The other states
+    carry over unchanged: ``host_stats/`` is copied from the previous
+    wave, and the hit log gains no delta. Marker written LAST, same
+    atomicity as a fetch wave."""
+    write_frame(ckpt_dir, wave, "seen_evict", evicted)
+    stats = read_host_stats(evicted.sparkSession, ckpt_dir, wave - 1)
+    if stats is not None:
+        write_host_stats(ckpt_dir, wave, stats)
+    commit_wave(
+        ckpt_dir, wave, frontier, evicted.limit(0), bloom_bytes, metrics
     )
-    with open(os.path.join(d, "bloom.bin"), "wb") as f:
-        f.write(bloom_bytes)
-    write_metrics(ckpt_dir, wave, metrics)
 
 
 def compact_dir(ckpt_dir: str, wave: int) -> str:
@@ -132,16 +194,10 @@ def latest_compaction(ckpt_dir: str, upto_wave: int) -> int | None:
     """Highest committed compaction snapshot at wave K <= upto_wave,
     or None. Snapshots NEWER than the resume point are ignored — a
     resume from wave 10 must not read a wave-50 snapshot."""
-    if not os.path.isdir(ckpt_dir):
-        return None
-    waves = [
-        k
-        for name in os.listdir(ckpt_dir)
-        if (m := re.fullmatch(r"compact=(\d+)", name)) is not None
-        and (k := int(m.group(1))) <= upto_wave
-        and os.path.exists(os.path.join(ckpt_dir, name, "_COMMITTED"))
-    ]
-    return max(waves) if waves else None
+    return max(
+        (k for k in _committed(ckpt_dir, "compact") if k <= upto_wave),
+        default=None,
+    )
 
 
 def compact_seen(
@@ -212,11 +268,9 @@ def read_seen(spark: SparkSession, ckpt_dir: str, upto_wave: int) -> DataFrame:
     if base is not None:
         paths.insert(0, os.path.join(compact_dir(ckpt_dir, base), "seen"))
     deltas = spark.read.parquet(*paths)
-    evict_paths = [
-        p
-        for w in range(start, upto_wave + 1)
-        if os.path.isdir(p := os.path.join(wave_dir(ckpt_dir, w), "seen_evict"))
-    ]
+    evict_paths = _artifact_paths(
+        ckpt_dir, range(start, upto_wave + 1), "seen_evict"
+    )
     if not evict_paths:
         return deltas
     dw = deltas.groupBy("url_hash").agg(F.max("wave").alias("_dw"))
@@ -237,9 +291,7 @@ def write_host_stats(ckpt_dir: str, wave: int, stats: DataFrame) -> None:
     the wave (bounded by hosts). Written before the _COMMITTED marker
     like every other wave artifact, so resume either sees a complete
     wave (stats included) or none of it."""
-    stats.write.mode("overwrite").parquet(
-        os.path.join(wave_dir(ckpt_dir, wave), "host_stats")
-    )
+    write_frame(ckpt_dir, wave, "host_stats", stats)
 
 
 def read_host_stats(
@@ -248,20 +300,25 @@ def read_host_stats(
     """Cumulative backoff stats of a committed wave, or None for a
     crawl that ran without backoff (resume then starts stats empty —
     identical to a fresh backoff crawl from that wave)."""
-    p = os.path.join(wave_dir(ckpt_dir, wave), "host_stats")
-    if not os.path.isdir(p):
-        return None
-    return spark.read.parquet(p)
+    return read_frame(spark, ckpt_dir, wave, "host_stats")
+
+
+def read_hit_log(
+    spark: SparkSession, ckpt_dir: str, upto_wave: int
+) -> DataFrame | None:
+    """The OPIC hit log ``(url, url_canon)`` of waves 0..upto_wave: the
+    union of their ``hit_delta/`` artifacts, or None when none has one
+    (resume then starts the edge set empty)."""
+    paths = _artifact_paths(ckpt_dir, range(upto_wave + 1), "hit_delta")
+    return spark.read.parquet(*paths) if paths else None
 
 
 def read_partition_metrics(
     spark: SparkSession, ckpt_dir: str, wave: int
-) -> DataFrame:
+) -> DataFrame | None:
     """Per-partition counters + lineage provenance for a committed
     wave (resume diagnostics / skew forensics)."""
-    return spark.read.parquet(
-        os.path.join(wave_dir(ckpt_dir, wave), "partition_metrics")
-    )
+    return read_frame(spark, ckpt_dir, wave, "partition_metrics")
 
 
 def read_bloom_bytes(ckpt_dir: str, wave: int) -> bytes:

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wos_crawler_spark.functions.urlnorm import url_host
+from wos_crawler_spark.operators.checkpoint import release
 
 
 def host_edges(
@@ -362,7 +363,9 @@ def opic_int(
     Scale shape mirrors :func:`opic`: per round one edge-keyed
     exchange (contributions) + two driver-scalar aggregates (dangling
     sum, residue sum); state is ``(node, cash, history)`` longs with
-    per-round ``localCheckpoint`` lineage truncation."""
+    per-round ``localCheckpoint`` lineage truncation; every
+    intermediate checkpoint is released before returning, so only the
+    result's own state stays (``checkpoint.release`` frees it)."""
     if n_iter < 1 or scale < 1:
         raise ValueError("n_iter and scale must be >= 1")
     ed = edges.select("src", "dst").distinct().localCheckpoint()
@@ -432,8 +435,10 @@ def opic_int(
             )
             .localCheckpoint()
         )
-        prev.unpersist()
+        release(prev)
 
+    release(ed)
+    release(nodes)
     return state.select(
         "node", (F.col("history") + F.col("cash")).cast("long").alias("importance")
     )

@@ -16,7 +16,8 @@ Per wave K:
                ─ misses → retry rows (attempt+1 ≤ max_retries, F7)
     frontier_{K+1} = expansions ∪ retries (U1)
     seen += this wave's scheduled url_hashes (U2); seen sketch merged+rebroadcast
-    checkpoint(frontier, seen_delta, sketch, metrics) → atomic commit
+    one tail persists every cross-wave state (frontier, seen, sketch,
+    backoff host_stats, OPIC hit log) → atomic commit of the wave
 
 The driver holds only counters and the seen-sketch bytes — row data never
 reaches the driver (no collect anywhere). Each wave's plan starts from
@@ -26,19 +27,23 @@ a parquet read, so lineage stays O(1) in the wave count.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wos_crawler_spark.functions.urlnorm import with_url_canon
 from wos_crawler_spark.operators import checkpoint as ckpt
+from wos_crawler_spark.operators.backoff import backoff_plan, fold_host_stats
 from wos_crawler_spark.operators.bloom import (
     SeenSketch,
     bloom_from_bytes,
     sized_sketch,
 )
 from wos_crawler_spark.operators.dedup import dedup_frontier
+from wos_crawler_spark.operators.linkgraph import opic_int
 from wos_crawler_spark.operators.parse_plaintext import parse_pages
 from wos_crawler_spark.operators.politeness import schedule_wave
 from wos_crawler_spark.operators.robots import robots_filter
@@ -159,12 +164,12 @@ class CrawlConfig:
     parse: bool = True
     ckpt_dir: str | None = None
     #: Keep each wave's fetched/parsed caches alive so the returned
-    #: CrawlResult.fetch_log / .parsed read them for free (default —
-    #: benches and tests consume them). Long checkpointed crawls set
-    #: False: every wave's cache is unpersisted once its counters and
-    #: checkpoint are committed (the checkpoint store is the durable
-    #: record), so executor storage stays O(1) in wave count instead
-    #: of accumulating every wave's page payloads.
+    #: CrawlResult.fetch_log / .parsed / .gate_report() read them for
+    #: free (default — benches and tests consume them). Long crawls set
+    #: False: once a wave's counters and state are persisted, its
+    #: cache, its lazy frames and the state it superseded are released
+    #: (the checkpoint store is the durable record), so executor
+    #: storage stays O(1) in wave count.
     keep_wave_caches: bool = True
     #: Score-driven frontier ordering (SURVEY W1 end-to-end): after
     #: each wave, re-prioritize EVERY next-frontier row (expansions,
@@ -228,6 +233,12 @@ class WaveResult:
     wall_s: float = 0.0  # driver wall-clock for this wave (incl. ckpt)
 
 
+#: the per-wave counters of CrawlResult.metrics and metrics.json
+WAVE_METRICS = (
+    "wave", "scheduled", "hits", "misses", "retried", "expanded", "parsed_docs",
+)
+
+
 @dataclass
 class CrawlResult:
     waves: list[WaveResult] = field(default_factory=list)
@@ -240,21 +251,7 @@ class CrawlResult:
         """A4: per-wave crawl metrics (the reference's Scrapy
         MemoryStatsCollector dict, per-wave instead of per-run);
         persisted per wave by checkpoint.write_metrics."""
-        return [
-            {
-                k: getattr(w, k)
-                for k in (
-                    "wave",
-                    "scheduled",
-                    "hits",
-                    "misses",
-                    "retried",
-                    "expanded",
-                    "parsed_docs",
-                )
-            }
-            for w in self.waves
-        ]
+        return [{k: getattr(w, k) for k in WAVE_METRICS} for w in self.waves]
 
     def gate_report(self) -> DataFrame | None:
         """Union of every wave's lazy admission-funnel counters
@@ -263,16 +260,74 @@ class CrawlResult:
         Materializing it costs one agg job per wave; until then it is
         free (the frames read the materialized per-wave frontiers)."""
         frames = [w.gate_metrics for w in self.waves if w.gate_metrics is not None]
-        if not frames:
-            return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        return reduce(DataFrame.unionByName, frames) if frames else None
 
 
 #: Above this, seed evaluation falls back to a broadcast theta join.
 MAX_INLINE_SEEDS = 4096
+
+
+def frontier_rows(
+    df: DataFrame, depth: Column, wave: int, lineage: Column
+) -> DataFrame:
+    """Complete ``df`` (url, url_canon, url_hash, host, query_id,
+    priority) into fresh frontier rows: ``depth`` and ``lineage`` are
+    Column expressions over ``df``, discovered at ``wave``, first
+    attempt, subject to seen-dedup."""
+    return df.select(
+        "url", "url_canon", "url_hash", "host", "priority",
+        depth.alias("depth"),
+        F.lit(wave).alias("discovered_wave"),
+        F.lit(0).alias("attempt"),
+        "query_id",
+        F.lit(False).alias("dont_filter"),
+        lineage.alias("lineage"),
+    )
+
+
+def _seed_frontier(matches: DataFrame) -> DataFrame:
+    return frontier_rows(
+        matches, F.lit(0), 0,
+        F.concat(F.lit("seed:"), F.col("query_id").cast("string")),
+    )
+
+
+def _match_seeds(pages: DataFrame, preds: list) -> DataFrame:
+    """``(url, url_canon, url_hash, host, query_id, priority)`` for
+    every (page, query) match, ``preds`` being driver-side
+    ``(query_id, predicate, priority)`` triples. The match compiles
+    into a single codegen'd projection fused with the pages scan,
+    ``explode(array(when(pred, struct(...))))`` + a null filter —
+    map-only, no join at all."""
+    hits_arr = F.array(
+        *[
+            F.when(
+                pred,
+                F.struct(
+                    F.lit(qid).cast("long").alias("query_id"),
+                    F.lit(prio).cast("int").alias("priority"),
+                ),
+            )
+            for qid, pred, prio in preds
+        ]
+    )
+    # explode the full array and drop nulls AFTER: array filter()
+    # is a higher-order function (CodegenFallback — interpreted),
+    # while Generate(explode) + a null filter stay inside
+    # whole-stage codegen. Row amplification is n_seeds per page,
+    # the same work the join would do.
+    return (
+        with_url_canon(pages.select("url", "text"))
+        .select(
+            "url", "url_canon", "url_hash", "host",
+            F.explode(hits_arr).alias("_m"),
+        )
+        .filter(F.col("_m").isNotNull())
+        .select(
+            "url", "url_canon", "url_hash", "host",
+            "_m.query_id", "_m.priority",
+        )
+    )
 
 
 def init_frontier(seeds: DataFrame, pages: DataFrame) -> DataFrame:
@@ -282,16 +337,12 @@ def init_frontier(seeds: DataFrame, pages: DataFrame) -> DataFrame:
 
     Seeds are driver-scale (the reference reads a query list FILE on
     the driver — SURVEY S1), so the default path collects them and
-    compiles the match into a single codegen'd projection:
-    ``explode(filter(array(when(contains(text, term), struct(...)))))``
-    — map-only, fused with the scan, no join at all. A
-    BroadcastNestedLoopJoin would evaluate the contains() predicate
-    INTERPRETED (BNLJ is outside whole-stage codegen) and measured
-    ~1.5-3x slower with poor core scaling. Seed lists beyond
-    MAX_INLINE_SEEDS fall back to the broadcast theta join."""
-    # canonicalize in the SAME projection: fuses with the scan's
-    # codegen stage, one pass over the pages cache.
-    canon_pages = with_url_canon(pages.select("url", "text"))
+    matches ``contains(text, term)`` predicates in one map-only pass
+    (:func:`_match_seeds`). A BroadcastNestedLoopJoin would evaluate
+    the contains() predicate INTERPRETED (BNLJ is outside whole-stage
+    codegen) and measured ~1.5-3x slower with poor core scaling. Seed
+    lists beyond MAX_INLINE_SEEDS fall back to the broadcast theta
+    join."""
     # one bounded job probes size AND fetches the rows (count() +
     # collect() would run the seeds plan twice)
     seed_rows = (
@@ -299,61 +350,17 @@ def init_frontier(seeds: DataFrame, pages: DataFrame) -> DataFrame:
         .limit(MAX_INLINE_SEEDS + 1)
         .collect()
     )
-    if len(seed_rows) > MAX_INLINE_SEEDS:
-        seed_rows = None
-    if seed_rows is not None:
-        hits_arr = F.array(
-            *[
-                F.when(
-                    F.col("text").contains(F.lit(r.term)),
-                    F.struct(
-                        F.lit(r.query_id).cast("long").alias("query_id"),
-                        F.lit(r.priority).cast("int").alias("priority"),
-                    ),
-                )
-                for r in seed_rows
-            ]
-        )
-        # explode the full array and drop nulls AFTER: array filter()
-        # is a higher-order function (CodegenFallback — interpreted),
-        # while Generate(explode) + a null filter stay inside
-        # whole-stage codegen. Row amplification is n_seeds per page,
-        # the same work the join would do.
-        matches = (
-            canon_pages.select(
-                "url",
-                "url_canon",
-                "url_hash",
-                "host",
-                F.explode(hits_arr).alias("_m"),
-            )
-            .filter(F.col("_m").isNotNull())
-            .select(
-                "url", "url_canon", "url_hash", "host",
-                F.col("_m.query_id").alias("query_id"),
-                F.col("_m.priority").alias("priority"),
-            )
-        )
-        f = matches
-    else:
-        matches = canon_pages.join(
-            F.broadcast(seeds.select("query_id", "term", "priority")),
-            F.col("text").contains(F.col("term")),
-            "inner",
-        )
-        f = matches.select(
-            "url", "url_canon", "url_hash", "host", "query_id", "priority"
-        )
-    return (
-        f.withColumn("depth", F.lit(0))
-        .withColumn("discovered_wave", F.lit(0))
-        .withColumn("attempt", F.lit(0))
-        .withColumn("dont_filter", F.lit(False))
-        .withColumn(
-            "lineage", F.concat(F.lit("seed:"), F.col("query_id").cast("string"))
-        )
-        .select(FRONTIER_COLS)
+    if len(seed_rows) <= MAX_INLINE_SEEDS:
+        return _seed_frontier(_match_seeds(pages, [
+            (r.query_id, F.col("text").contains(F.lit(r.term)), r.priority)
+            for r in seed_rows
+        ]))
+    matches = with_url_canon(pages.select("url", "text")).join(
+        F.broadcast(seeds.select("query_id", "term", "priority")),
+        F.col("text").contains(F.col("term")),
+        "inner",
     )
+    return _seed_frontier(matches)
 
 
 def init_frontier_advanced(
@@ -367,58 +374,21 @@ def init_frontier_advanced(
     ``queries`` is a driver-scale list of ``(query_id, query_string,
     priority)`` — the reference reads exactly such a file (SURVEY S1)
     — and each query compiles to a Catalyst boolean over the page
-    row. Same shape as :func:`init_frontier`'s inline path: ONE
-    map-only pass fused with the scan,
-    ``explode(array(when(pred, struct)))`` + null filter — no join.
-    NEAR predicates ride along as interpreted HOFs (still map-side);
-    everything else stays codegen'd. Queries are compiled (and
-    syntax-checked) on the driver before any job runs."""
+    row. Same map-only pass as :func:`init_frontier`'s inline path
+    (:func:`_match_seeds`). NEAR predicates ride along as interpreted
+    HOFs (still map-side); everything else stays codegen'd. Queries
+    are compiled (and syntax-checked) on the driver before any job
+    runs."""
     from wos_crawler_spark.functions.wosquery import (
         parse_query,
         to_column,
     )
 
     fm = field_map or {"TS": "text"}
-    compiled = [
+    return _seed_frontier(_match_seeds(pages, [
         (qid, to_column(parse_query(q, fm, range_tags), fm), prio)
         for qid, q, prio in queries
-    ]
-    canon_pages = with_url_canon(pages.select("url", "text"))
-    hits_arr = F.array(
-        *[
-            F.when(
-                pred,
-                F.struct(
-                    F.lit(qid).cast("long").alias("query_id"),
-                    F.lit(prio).cast("int").alias("priority"),
-                ),
-            )
-            for qid, pred, prio in compiled
-        ]
-    )
-    f = (
-        canon_pages.select(
-            "url", "url_canon", "url_hash", "host",
-            F.explode(hits_arr).alias("_m"),
-        )
-        .filter(F.col("_m").isNotNull())
-        .select(
-            "url", "url_canon", "url_hash", "host",
-            F.col("_m.query_id").alias("query_id"),
-            F.col("_m.priority").alias("priority"),
-        )
-    )
-    return (
-        f.withColumn("depth", F.lit(0))
-        .withColumn("discovered_wave", F.lit(0))
-        .withColumn("attempt", F.lit(0))
-        .withColumn("dont_filter", F.lit(False))
-        .withColumn(
-            "lineage",
-            F.concat(F.lit("seed:"), F.col("query_id").cast("string")),
-        )
-        .select(FRONTIER_COLS)
-    )
+    ]))
 
 
 def expand_frontier(
@@ -435,18 +405,12 @@ def expand_frontier(
     ).join(links, "src_url", "inner")
     e = e.filter(F.col("depth") + 1 <= max_depth)
     e = with_url_canon(e.select(
-        F.col("dst_url").alias("url"),
-        "query_id",
-        "priority",
-        (F.col("depth") + 1).alias("depth"),
-        F.col("src_url"),
+        F.col("dst_url").alias("url"), "query_id", "priority", "depth",
+        "src_url",
     ))
-    return (
-        e.withColumn("discovered_wave", F.lit(wave + 1))
-        .withColumn("attempt", F.lit(0))
-        .withColumn("dont_filter", F.lit(False))
-        .withColumn("lineage", F.concat(F.lit("link:"), F.col("src_url")))
-        .select(FRONTIER_COLS)
+    return frontier_rows(
+        e, F.col("depth") + 1, wave + 1,
+        F.concat(F.lit("link:"), F.col("src_url")),
     )
 
 
@@ -463,6 +427,12 @@ def _storage(level: str | None):
     from pyspark import StorageLevel
 
     return getattr(StorageLevel, level or "MEMORY_AND_DISK")
+
+
+def _bucketed(df: DataFrame, parts: int, key: str) -> DataFrame:
+    """``df`` hash-partitioned on ``key`` and sorted within partitions,
+    so a join on ``key`` shuffles and sorts only its other side."""
+    return df.repartition(parts, key).sortWithinPartitions(key)
 
 
 def prepare_fetch_side(
@@ -488,12 +458,9 @@ def prepare_fetch_side(
     # non-null for an existing page. Probing a data column instead
     # (text/warc_ts) miscounts legitimately-null values as misses and
     # re-queues existing pages as retries every wave.
-    return (
-        pages.select(*cols, F.lit(True).alias("_page_hit"))
-        .repartition(parts, "url")
-        .sortWithinPartitions("url")
-        .persist(_storage(storage_level))
-    )
+    return _bucketed(
+        pages.select(*cols, F.lit(True).alias("_page_hit")), parts, "url"
+    ).persist(_storage(storage_level))
 
 
 def prepare_links_side(
@@ -501,11 +468,7 @@ def prepare_links_side(
 ) -> DataFrame:
     """Same single-shuffle treatment for the expansion join's links
     side (production: links table bucketed by src_url)."""
-    return (
-        links.repartition(parts, "src_url")
-        .sortWithinPartitions("src_url")
-        .persist(_storage(storage_level))
-    )
+    return _bucketed(links, parts, "src_url").persist(_storage(storage_level))
 
 
 def rewrite_through_redirects(frontier: DataFrame, rmap: DataFrame) -> DataFrame:
@@ -519,49 +482,40 @@ def rewrite_through_redirects(frontier: DataFrame, rmap: DataFrame) -> DataFrame
     )
 
 
-def _sched_domain_expr(cfg: "CrawlConfig"):
-    """Scheduling-unit key for politeness_domain mode: registrable
-    domain via the literal-subset expr (default) or the full-PSL
-    Arrow path when ``cfg.psl_rules`` is set (wildcard/exception
-    rules honored — operators/blocklist.py::registrable_domain_psl;
-    the simulator twin maps hosts through the shared python match
-    function, so fetch-order parity covers PSL mode too)."""
-    from wos_crawler_spark.operators.blocklist import (
-        registrable_domain,
-        registrable_domain_psl,
-    )
-
-    if cfg.psl_rules is not None:
-        rd = registrable_domain_psl(F.col("host"), cfg.psl_rules)
-    else:
-        rd = registrable_domain(F.col("host"))
-    return F.coalesce(rd, F.col("host"))
-
-
 def _with_sched_domain(
     df: DataFrame, cfg: "CrawlConfig", broadcast_dims: bool = True
 ) -> DataFrame:
     """``df`` + a ``_sched_dom`` column carrying the politeness
-    scheduling unit (registrable domain, raw host fallback).
+    scheduling unit: the host itself unless ``cfg.politeness_domain``,
+    else the registrable domain (raw host fallback).
 
     Two shapes by rule source:
 
     - literal-subset expr (default): pure map-side projection — zero
       added exchanges, unchanged from rounds 1–4.
-    - full PSL (``cfg.psl_rules``): the Arrow match runs over the
-      DISTINCT hosts only, then joins back as a per-host dim — the
-      python cost drops from O(frontier rows × call sites) to
-      O(hosts) per site (measured on the gate ledger: the per-row
+    - full PSL (``cfg.psl_rules``, wildcard/exception rules honored —
+      operators/blocklist.py::registrable_domain_psl): the Arrow match
+      runs over the DISTINCT hosts only, then joins back as a per-host
+      dim — the python cost drops from O(frontier rows × call sites)
+      to O(hosts) per site (measured on the gate ledger: the per-row
       Arrow pass cost +126% wave time vs the dim join's ~+35%). The
       dim join rides the same size gate as every other per-host dim
       (``broadcast_dims``); the VALUES are identical either way, so
-      the simulator fetch-order parity contract is unchanged."""
-    if cfg.psl_rules is None:
-        return df.withColumn("_sched_dom", _sched_domain_expr(cfg))
+      the simulator fetch-order parity contract is unchanged (the
+      simulator twin maps hosts through the shared python match
+      function)."""
     from wos_crawler_spark.operators.blocklist import (
+        registrable_domain,
         registrable_domain_psl,
     )
 
+    if not cfg.politeness_domain:
+        return df.withColumn("_sched_dom", F.col("host"))
+    if cfg.psl_rules is None:
+        return df.withColumn(
+            "_sched_dom",
+            F.coalesce(registrable_domain(F.col("host")), F.col("host")),
+        )
     dim = (
         df.select("host")
         .distinct()
@@ -575,9 +529,18 @@ def _with_sched_domain(
     )
     if broadcast_dims:
         dim = F.broadcast(dim)
-    # inner join is safe (every df host appears in its own distinct)
-    return df.join(dim, "host", "left").withColumn(
-        "_sched_dom", F.coalesce(F.col("_sched_dom"), F.col("host"))
+    # every non-null df host matches its own row of the distinct dim
+    return df.join(dim, "host", "left")
+
+
+def _gate_row(df: DataFrame, wave: int, order: int, stage: str) -> DataFrame:
+    """One lazy admission-funnel row: ``(wave, stage_order, stage,
+    rows)`` with ``rows`` = the row count of ``df``."""
+    return df.agg(F.count(F.lit(1)).alias("rows")).select(
+        F.lit(wave).alias("wave"),
+        F.lit(order).alias("stage_order"),
+        F.lit(stage).alias("stage"),
+        "rows",
     )
 
 
@@ -665,22 +628,16 @@ def run_wave(
         filtered, seen, bloom if cfg.bloom_prefilter else None, intra=False
     )
     gate_stages.append(("post_dedup", fresh))
-    gate_metrics = None
-    for _order, (_name, _df) in enumerate(gate_stages):
-        _row = _df.agg(F.count(F.lit(1)).alias("rows")).select(
-            F.lit(wave).alias("wave"),
-            F.lit(_order).alias("stage_order"),
-            F.lit(_name).alias("stage"),
-            "rows",
-        )
-        gate_metrics = (
-            _row if gate_metrics is None else gate_metrics.unionByName(_row)
-        )
+    gate_metrics = reduce(DataFrame.unionByName, [
+        _gate_row(df, wave, order, name)
+        for order, (name, df) in enumerate(gate_stages)
+    ])
     # ALWAYS cache: the Bloom dedup is a two-branch union (new ∪
     # rescued) and the scheduler reads candidates twice more
     # (salt_counts agg + the schedule join) — without the cache the
     # robots→canon→dedup subtree executes 3-4× per wave.
     candidates = fresh.unionByName(bypass).cache()
+    to_sched = candidates
     if cfg.politeness_domain:
         # scheduling-unit rewrite: the politeness/quota key becomes
         # the registrable domain for the duration of schedule_wave,
@@ -693,27 +650,18 @@ def run_wave(
             .withColumn("host", F.col("_sched_dom"))
             .drop("_sched_dom")
         )
-        sched = schedule_wave(
-            to_sched,
-            delay_s=cfg.delay_s,
-            wave_start=wave_start,
-            quota=cfg.quota,
-            rows_per_bucket=cfg.rows_per_bucket,
-            dedup_intra=True,
-            host_delays=host_delays,
-            broadcast_dims=broadcast_dims,
-        ).withColumn("host", F.col("_true_host")).drop("_true_host")
-    else:
-        sched = schedule_wave(
-            candidates,
-            delay_s=cfg.delay_s,
-            wave_start=wave_start,
-            quota=cfg.quota,
-            rows_per_bucket=cfg.rows_per_bucket,
-            dedup_intra=True,
-            host_delays=host_delays,
-            broadcast_dims=broadcast_dims,
-        )
+    sched = schedule_wave(
+        to_sched,
+        delay_s=cfg.delay_s,
+        wave_start=wave_start,
+        quota=cfg.quota,
+        rows_per_bucket=cfg.rows_per_bucket,
+        dedup_intra=True,
+        host_delays=host_delays,
+        broadcast_dims=broadcast_dims,
+    )
+    if cfg.politeness_domain:
+        sched = sched.withColumn("host", F.col("_true_host")).drop("_true_host")
 
     # J3: "fetch" — resolve url → page payload (left join keeps misses).
     # `fetched` is the ONLY materialization point of the wave: every
@@ -879,6 +827,85 @@ def run_wave(
     return res, next_frontier, seen_delta
 
 
+class _WaveState:
+    """One state the crawl carries across waves. ``value`` is what the
+    next wave reads; each wave sets ``fold`` to what replaces it — for
+    a ``delta`` state only the wave's new rows, the state being the
+    union of every wave's delta. :meth:`persist` stores the fold:
+    under ``cfg.ckpt_dir`` as the wave's ``artifact``, then ``value``
+    is ``read``'s read-back of it — the same ``read`` resume calls, so
+    a state is restored exactly as it was stored; without a checkpoint
+    dir as a localCheckpoint of the folded value (``layout`` first).
+    ``replaced`` keeps the superseded value for release.
+    ``wave_input``: the wave's own frames (fetched, gate metrics) are
+    computed from the superseded value, so it lives as long as they
+    do."""
+
+    def __init__(self, artifact, read, delta=False, layout=None, wave_input=True):
+        self.artifact, self.read = artifact, read
+        self.delta, self.layout, self.wave_input = delta, layout, wave_input
+        self.value = self.fold = self.replaced = None
+
+    def folded(self) -> DataFrame:
+        """The state after this wave, lazily."""
+        if self.delta and self.value is not None:
+            return self.value.unionByName(self.fold)
+        return self.fold
+
+    def persist(self, spark: SparkSession, cfg: CrawlConfig, wave: int) -> None:
+        self.replaced = self.value
+        if cfg.ckpt_dir:
+            ckpt.write_frame(cfg.ckpt_dir, wave, self.artifact, self.fold)
+            self.value = self.read(spark, cfg.ckpt_dir, wave)
+        else:
+            v = self.folded()
+            self.value = (self.layout(v) if self.layout else v).localCheckpoint()
+
+
+class _SketchState(_WaveState):
+    """A2: the seen sketch, a driver-side object. Its fold (the wave's
+    seen delta; None when the wave scheduled nothing) is built at the
+    sketch's own flavor and bank count (the checkpoint's on resume)
+    and merged in; a cfg capacity/fpp that gives another shape is a
+    hard error. Stored as ``bloom.bin``."""
+
+    def persist(self, spark: SparkSession, cfg: CrawlConfig, wave: int) -> None:
+        if self.fold is not None:
+            self.value = self.value.merge(
+                self.value.build_like(
+                    self.fold, "url_hash", cfg.bloom_capacity, cfg.bloom_fpp
+                )
+            )
+        if cfg.ckpt_dir:
+            ckpt.write_bloom_bytes(cfg.ckpt_dir, wave, self.value.to_bytes())
+
+
+def _opic_rescore(
+    frontier: DataFrame, hit_log: DataFrame, links: DataFrame, cfg: CrawlConfig
+) -> tuple[DataFrame, DataFrame | None]:
+    """Score-driven W1: re-prioritize ``frontier`` by integer OPIC
+    importance over the CUMULATIVE observed edge set (every fetched
+    hit's outlinks, canon space — raw-dst canon, redirect-blind by
+    design: a landed row whose canon differs simply keeps its
+    inherited priority, mirrored exactly by the simulator twin).
+    Returns the rescored frontier and the scores it reads (None while
+    there are no edges)."""
+    e0 = hit_log.join(links, hit_log.url == links.src_url).select(
+        F.col("url_canon").alias("src"), F.col("dst_url").alias("url")
+    )
+    edges = with_url_canon(e0).select("src", F.col("url_canon").alias("dst"))
+    if edges.isEmpty():
+        return frontier, None
+    scores = opic_int(edges, n_iter=cfg.opic_iters, scale=cfg.opic_scale)
+    rescored = frontier.join(
+        scores, frontier.url_canon == scores.node, "left"
+    ).withColumn(
+        "priority",
+        F.coalesce(F.col("importance").cast("int"), F.col("priority")),
+    )
+    return rescored.select(FRONTIER_COLS), scores
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -910,24 +937,26 @@ def run_crawl(
     out = CrawlResult()
 
     # per-host Crawl-delay dim (robots.parse_robots_delays): tiny —
-    # one driver-side max fixes the conservative cross-wave gap.
+    # one driver-side agg fixes the conservative cross-wave gap and
+    # counts the dim's hosts.
     inter_wave_gap: float | None = None
+    n_dim = 0
     if host_delays is not None:
-        max_delay = host_delays.agg(F.max("crawl_delay")).first()[0]
+        max_delay, n_dim = host_delays.agg(
+            F.max("crawl_delay"), F.count_distinct("host")
+        ).first()
         inter_wave_gap = max(cfg.delay_s, float(max_delay or 0.0))
 
-    # Size-gate the per-host broadcast dims ONCE per crawl: a robots/
-    # delay dim spanning more hosts than dim_broadcast_threshold
-    # drops its broadcast hints for the whole run (the dim joins key
-    # on host; AQE may still convert small ones back at runtime).
-    # The wave-variant backoff dim is re-sized per wave below.
+    # Size-gate the per-host broadcast dims ONCE per crawl, each by its
+    # distinct hosts: a robots/delay dim spanning more hosts than
+    # dim_broadcast_threshold drops its broadcast hints for the whole
+    # run (the dim joins key on host; AQE may still convert small ones
+    # back at runtime). The wave-variant backoff dim is re-sized per
+    # wave below.
     dims_bcast = True
     if cfg.dim_broadcast_threshold is not None:
-        n_dim = 0
         if robots is not None:
-            n_dim = robots.select("host").distinct().count()
-        if host_delays is not None:
-            n_dim = max(n_dim, host_delays.count())
+            n_dim = max(n_dim, robots.select("host").distinct().count())
         dims_bcast = n_dim <= cfg.dim_broadcast_threshold
 
     if cfg.opic_priority:
@@ -939,54 +968,17 @@ def run_crawl(
                 f"priority; lower opic_scale or opic_iters"
             )
 
-    start_wave = 0
-    frontier = None
-    seen: DataFrame | None = None
-    sketch: SeenSketch | None = None
-    wave_start = 0.0
-    hit_log: DataFrame | None = None  # opic_priority: cumulative hits
-
-    host_stats: DataFrame | None = None  # backoff: (host, sched, miss)
-    if resume and cfg.ckpt_dir:
-        last = ckpt.latest_wave(cfg.ckpt_dir)
-        if last is not None:
-            start_wave = last + 1
-            frontier = ckpt.read_frontier(spark, cfg.ckpt_dir, last)
-            seen = ckpt.read_seen(spark, cfg.ckpt_dir, last)
-            # the checkpointed sketch's flavor and bank count win over cfg
-            sketch = bloom_from_bytes(ckpt.read_bloom_bytes(cfg.ckpt_dir, last))
-            wave_start = ckpt.read_metrics(cfg.ckpt_dir, last)["next_start_ts"]
-            if cfg.backoff:
-                # backoff policy is a pure function of cumulative host
-                # stats — restoring them makes resume ≡ uninterrupted
-                # for backoff crawls too (parity-tested)
-                host_stats = ckpt.read_host_stats(spark, cfg.ckpt_dir, last)
-    if sketch is None:
-        sketch = sized_sketch(
-            cfg.seen_filter, cfg.bloom_capacity, cfg.bloom_fpp, cfg.bloom_banks
-        )
-
     # one-time layout work (production: Iceberg bucket(url)/bucket(src_url)
     # table specs make these free — see prepare_fetch_side docstring)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     own_layout = pages_fetch is None
-    pages_kv = (
-        pages_fetch
-        if pages_fetch is not None
-        else prepare_fetch_side(
-            pages, parts, with_text=cfg.parse,
-            storage_level=cfg.join_cache_storage,
-        )
+    pages_kv = pages_fetch if not own_layout else prepare_fetch_side(
+        pages, parts, with_text=cfg.parse, storage_level=cfg.join_cache_storage
     )
-    if links_prepped is not None:
-        links_kv = links_prepped
-    else:
-        links_kv = (
-            prepare_links_side(
-                links, parts, storage_level=cfg.join_cache_storage
-            )
-            if links is not None
-            else None
+    links_kv = links_prepped
+    if links_kv is None and links is not None:
+        links_kv = prepare_links_side(
+            links, parts, storage_level=cfg.join_cache_storage
         )
 
     # redirect map: resolved once per crawl (wave-invariant), cached
@@ -1002,14 +994,58 @@ def run_crawl(
         )
         rmap.count()
 
-    if frontier is None:
-        frontier = init_frontier(seeds, pages)
+    # The cross-wave state. Keep the seen table hash-partitioned AND
+    # sorted on url_hash (localCheckpoint preserves both): every later
+    # wave's exact anti-join then shuffles/sorts ONLY its (Bloom-shrunk)
+    # probe side — the growing seen side stays in place. Production
+    # analog: the seen Iceberg table PARTITIONED BY bucket(url_hash),
+    # storage-partitioned join.
+    frontier = _WaveState("frontier", ckpt.read_frontier)
+    seen = _WaveState(
+        "seen_delta", ckpt.read_seen, delta=True,
+        layout=lambda s: _bucketed(s, parts, "url_hash"),
+    )
+    sketch = _SketchState(
+        "bloom.bin",
+        lambda _spark, d, w: bloom_from_bytes(ckpt.read_bloom_bytes(d, w)),
+    )
+    # backoff: cumulative (host, sched, miss) — the policy is a pure
+    # function of it; OPIC: every hit's (url, url_canon)
+    host_stats = (
+        _WaveState("host_stats", ckpt.read_host_stats) if cfg.backoff else None
+    )
+    hit_log = (
+        _WaveState("hit_delta", ckpt.read_hit_log, delta=True, wave_input=False)
+        if cfg.opic_priority and links_kv is not None
+        else None
+    )
+    states = [
+        st for st in (frontier, seen, sketch, host_stats, hit_log)
+        if st is not None
+    ]
+
+    start_wave, wave_start = 0, 0.0
+    last = ckpt.latest_wave(cfg.ckpt_dir) if resume and cfg.ckpt_dir else None
+    if last is not None:
+        # every state comes back as the tail stored it (the sketch's
+        # flavor and bank count win over cfg); one the checkpoint
+        # lacks starts empty
+        start_wave = last + 1
+        wave_start = ckpt.read_metrics(cfg.ckpt_dir, last)["next_start_ts"]
+        for st in states:
+            st.value = st.read(spark, cfg.ckpt_dir, last)
+    if sketch.value is None:
+        sketch.value = sized_sketch(
+            cfg.seen_filter, cfg.bloom_capacity, cfg.bloom_fpp, cfg.bloom_banks
+        )
+    if frontier.value is None:
+        frontier.value = init_frontier(seeds, pages)
         if rmap is not None:
-            frontier = rewrite_through_redirects(frontier, rmap)
+            frontier.value = rewrite_through_redirects(frontier.value, rmap)
     # materialize once: without this, wave 0's seed-match theta join
     # would run twice (emptiness probe + first candidate use)
-    frontier = frontier.localCheckpoint()
-    frontier_n = frontier.count()
+    frontier.value = frontier.value.localCheckpoint()
+    frontier_n = frontier.value.count()
 
     fetch_logs = []
     parsed_frames = []
@@ -1024,15 +1060,13 @@ def run_crawl(
         # backed-off hosts ride the existing host_delays channel into
         # schedule_wave. The inter-wave gap stays conservative under
         # the escalated delays (one driver-scale max over the dim).
+        wave_frontier = frontier.value
         eff_delays, eff_gap = host_delays, inter_wave_gap
         bo = None
-        pre_bo_frontier = None
         wave_bcast = dims_bcast
-        if cfg.backoff and host_stats is not None:
-            from wos_crawler_spark.operators.backoff import backoff_plan
-
+        if host_stats is not None and host_stats.value is not None:
             bo = backoff_plan(
-                host_stats, cfg.delay_s, host_delays,
+                host_stats.value, cfg.delay_s, host_delays,
                 **cfg.backoff_kwargs,
             ).cache()
             # one agg materializes the bo cache AND sizes the wave's
@@ -1054,112 +1088,67 @@ def run_crawl(
             # with politeness_domain, stats/delays/quarantine all key
             # on the registrable domain (see the stats fold below) —
             # quarantining one dead subdomain cuts off the registrant
-            pre_bo_frontier = frontier
-            if cfg.politeness_domain:
-                fr_keyed = _with_sched_domain(frontier, cfg, wave_bcast)
-            else:
-                fr_keyed = frontier.withColumn(
-                    "_sched_dom", F.col("host")
-                )
-            frontier = fr_keyed.join(
-                quar, F.col("_sched_dom") == F.col("_qkey"), "left_anti"
-            ).drop("_sched_dom")
+            wave_frontier = (
+                _with_sched_domain(wave_frontier, cfg, wave_bcast)
+                .join(quar, F.col("_sched_dom") == F.col("_qkey"), "left_anti")
+                .drop("_sched_dom")
+            )
             eff_delays = bo.select("host", "crawl_delay")
         res, next_frontier, seen_delta = run_wave(
-            spark, wave, frontier, pages_kv, links_kv, robots, seen, sketch,
-            cfg, wave_start,
+            spark, wave, wave_frontier, pages_kv, links_kv, robots,
+            seen.value, sketch.value, cfg, wave_start,
             host_delays=eff_delays, inter_wave_gap_s=eff_gap,
             rmap=rmap, broadcast_dims=wave_bcast,
         )
-        if pre_bo_frontier is not None and res.gate_metrics is not None:
+        if bo is not None and res.gate_metrics is not None:
             # prepend the backoff-quarantine boundary so the funnel
             # reads pre_backoff → input → post_robots → … (quarantine
             # drop = pre_backoff − input)
-            res.gate_metrics = pre_bo_frontier.agg(
-                F.count(F.lit(1)).alias("rows")
-            ).select(
-                F.lit(wave).alias("wave"),
-                F.lit(-1).alias("stage_order"),
-                F.lit("pre_backoff").alias("stage"),
-                "rows",
+            res.gate_metrics = _gate_row(
+                frontier.value, wave, -1, "pre_backoff"
             ).unionByName(res.gate_metrics)
-        if (
-            cfg.opic_priority
-            and links_kv is not None
-            and not (wave == cfg.max_waves - 1 and not cfg.ckpt_dir)
-        ):
-            # (final non-checkpointed wave skipped: its next_frontier
-            # is discarded, so scoring it would be throwaway jobs —
-            # the same rule as the is_final tail-job skip below)
-            # Score-driven W1: importance over the CUMULATIVE observed
-            # edge set (every fetched hit's outlinks, canon space —
-            # raw-dst canon, redirect-blind by design: a landed row
-            # whose canon differs simply keeps its inherited
-            # priority, mirrored exactly by the simulator twin).
-            # Runs BEFORE the frontier checkpoint so the committed
-            # frontier carries the new priorities; res.fetched is
-            # still cached, so the hits scan is a cache read.
-            wave_hits = res.fetched.filter(
+
+        # The last wave of a crawl without a checkpoint dir persists
+        # nothing: the loop cannot continue, so materializing the next
+        # frontier, re-laying-out seen, folding the sketch and scoring
+        # OPIC would be throwaway work — measured at >50% of the final
+        # wave's wall time at 6M URLs. seen stays a lazy union
+        # (consumers force it on demand); retried/expanded stay -1.
+        # A checkpointed crawl always persists: a committed final
+        # frontier is what makes `resume` with a higher max_waves
+        # budget possible.
+        persist = bool(cfg.ckpt_dir) or wave < cfg.max_waves - 1
+        # fold every state with the wave; the folds are lazy reads of
+        # the wave's caches
+        seen.fold = seen_delta
+        sketch.fold = seen_delta if res.scheduled else None
+        if host_stats is not None:
+            wave_src = (
+                _with_sched_domain(res.fetched, cfg, wave_bcast)
+                .withColumn("host", F.col("_sched_dom"))
+                .drop("_sched_dom")
+            )
+            host_stats.fold = fold_host_stats(
+                host_stats.value, wave_src, res.hit_col
+            )
+        scores = None
+        if hit_log is not None:
+            hit_log.fold = res.fetched.filter(
                 F.col(res.hit_col).isNotNull()
             ).select("url", "url_canon")
-            hit_log = (
-                wave_hits
-                if hit_log is None
-                else hit_log.unionByName(wave_hits)
-            ).localCheckpoint()
-            e0 = hit_log.join(
-                links_kv, hit_log.url == links_kv.src_url
-            ).select(
-                F.col("url_canon").alias("src"),
-                F.col("dst_url").alias("url"),
-            )
-            edges = with_url_canon(e0).select(
-                "src", F.col("url_canon").alias("dst")
-            )
-            if not edges.isEmpty():
-                from wos_crawler_spark.operators.linkgraph import opic_int
-
-                scores = opic_int(
-                    edges, n_iter=cfg.opic_iters, scale=cfg.opic_scale
+            if persist:
+                # before the frontier persists, so it carries the new
+                # priorities
+                next_frontier, scores = _opic_rescore(
+                    next_frontier, hit_log.folded(), links_kv, cfg
                 )
-                next_frontier = (
-                    next_frontier.join(
-                        scores,
-                        next_frontier.url_canon == scores.node,
-                        "left",
-                    )
-                    .withColumn(
-                        "priority",
-                        F.coalesce(
-                            F.col("importance").cast("int"),
-                            F.col("priority"),
-                        ),
-                    )
-                    .select(FRONTIER_COLS)
-                )
+        obs = Observation()
+        frontier.fold = next_frontier.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("dont_filter").cast("long")).alias("retried"),
+        )
         out.waves.append(res)
-        if cfg.backoff:
-            from wos_crawler_spark.operators.backoff import fold_host_stats
-
-            wave_src = res.fetched
-            if cfg.politeness_domain:
-                wave_src = (
-                    _with_sched_domain(res.fetched, cfg, wave_bcast)
-                    .withColumn("host", F.col("_sched_dom"))
-                    .drop("_sched_dom")
-                )
-            host_stats = fold_host_stats(host_stats, wave_src, res.hit_col)
-            if cfg.ckpt_dir:
-                # persist with the wave (before its _COMMITTED marker)
-                # and re-read — durability AND lineage truncation
-                ckpt.write_host_stats(cfg.ckpt_dir, wave, host_stats)
-                host_stats = ckpt.read_host_stats(spark, cfg.ckpt_dir, wave)
-            else:
-                # lazy here, but FORCED by the wave's concurrent tail
-                # jobs below while res.fetched is still cached (a
-                # post-unpersist materialization would re-execute the
-                # whole wave chain); lineage truncates per wave
-                host_stats = host_stats.localCheckpoint(eager=False)
         if cfg.keep_wave_caches:
             fetch_logs.append(
                 res.fetched.select(
@@ -1171,172 +1160,66 @@ def run_crawl(
                 parsed_frames.append(res.parsed)
         wave_start = res.next_start_ts
 
-        def _fold_sketch() -> SeenSketch:
-            """A2: build this wave's seen delta into a sketch of the
-            crawl's flavor and bank count (the checkpoint's on resume),
-            then fold it in; a cfg capacity/fpp that gives another
-            shape is a hard error."""
-            if not res.scheduled:
-                return sketch
-            return sketch.merge(
-                sketch.build_like(
-                    seen_delta, "url_hash", cfg.bloom_capacity, cfg.bloom_fpp
-                )
-            )
-
-        # Final wave (no checkpointing): the loop cannot continue, so
-        # materializing the next frontier, re-laying-out seen for a
-        # future anti-join, and folding the sketch are pure throwaway
-        # work — measured at >50% of the final wave's wall time at 6M
-        # URLs. seen stays a lazy union (consumers force it on
-        # demand); retried/expanded stay -1 (unknown without running
-        # the expansion join). The checkpoint path never skips: a
-        # committed final frontier is what makes `resume` with a
-        # higher max_waves budget possible.
-        is_final = wave == cfg.max_waves - 1 and not cfg.ckpt_dir
-
-        if cfg.ckpt_dir:
-            sketch = _fold_sketch()
-            ckpt.commit_wave(
-                cfg.ckpt_dir, wave, next_frontier, seen_delta, sketch.to_bytes(),
-                metrics=None,  # committed below, after counts
-                part_metrics=res.part_metrics,
-            )
-            # lineage truncation: next wave reads back from disk
-            frontier = ckpt.read_frontier(spark, cfg.ckpt_dir, wave)
-            seen = ckpt.read_seen(spark, cfg.ckpt_dir, wave)
-        elif is_final:
-            seen = (
-                seen.unionByName(seen_delta) if seen is not None else seen_delta
-            )
-            frontier = None
-            nf_n, retried_n = 0, None
+        frontier_n = 0
+        if persist:
+            # One tail persists every state. Its jobs read only the
+            # wave's caches, so they run CONCURRENTLY from driver
+            # threads: the FIFO scheduler interleaves their stages and
+            # the parallelism-independent stage-launch latency is paid
+            # once instead of once per state. The frontier's counts
+            # ride its persist job (observe — no separate count job).
+            with ThreadPoolExecutor(max_workers=len(states) + 1) as pool:
+                jobs = [pool.submit(st.persist, spark, cfg, wave) for st in states]
+                if cfg.ckpt_dir:
+                    jobs.append(pool.submit(
+                        ckpt.write_frame, cfg.ckpt_dir, wave,
+                        "partition_metrics", res.part_metrics,
+                    ))
+                for job in jobs:
+                    job.result()
+            frontier_n = obs.get["n"]
+            res.retried = int(obs.get["retried"] or 0)
+            res.expanded = frontier_n - res.retried
         else:
-            # Three independent materialization jobs close the wave:
-            # (A) sketch partial-build over the delta, (B) seen
-            # accumulate + lineage truncation, (C) next-frontier
-            # truncation (+ piggybacked metrics via observe — no
-            # separate count job). All three read only the wave's
-            # caches, so they run CONCURRENTLY from driver threads:
-            # the FIFO scheduler interleaves their stages and the
-            # parallelism-independent stage-launch latency is paid
-            # once (max of three) instead of serially (sum of three).
-            from concurrent.futures import ThreadPoolExecutor
+            seen.value = seen.folded()
 
-            from pyspark.sql import Observation
-
-            def _seen_job() -> DataFrame:
-                new_seen = (
-                    seen.unionByName(seen_delta)
-                    if seen is not None
-                    else seen_delta
-                )
-                # Keep the seen table hash-partitioned AND sorted on
-                # url_hash (localCheckpoint preserves both): every
-                # later wave's exact anti-join then shuffles/sorts
-                # ONLY its (Bloom-shrunk) probe side — the growing
-                # seen side stays in place. Production analog: the
-                # seen Iceberg table PARTITIONED BY bucket(url_hash),
-                # storage-partitioned join.
-                return (
-                    new_seen.repartition(parts, "url_hash")
-                    .sortWithinPartitions("url_hash")
-                    .localCheckpoint()
-                )
-
-            def _frontier_job() -> tuple[DataFrame, int, int]:
-                obs = Observation()
-                fr = next_frontier.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("dont_filter").cast("long")).alias("retried"),
-                ).localCheckpoint()
-                return fr, obs.get["n"], obs.get["retried"]
-
-            # Backoff's lazy host_stats localCheckpoint must
-            # materialize WHILE res.fetched is still cached: deferring
-            # to the next wave's backoff_plan jobs (its first natural
-            # action) lands after the unpersists below, silently
-            # re-executing this wave's admission/schedule/fetch chain
-            # once per wave. One narrow count over the cached fold —
-            # concurrent with the other tail jobs, so its stage-launch
-            # latency hides under theirs.
-            hs_force = (
-                host_stats
-                if cfg.backoff and host_stats is not None
-                else None
-            )
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                f_sketch = pool.submit(_fold_sketch)
-                f_seen = pool.submit(_seen_job)
-                f_frontier = pool.submit(_frontier_job)
-                f_hs = (
-                    pool.submit(hs_force.count) if hs_force is not None else None
-                )
-                sketch = f_sketch.result()
-                seen = f_seen.result()
-                frontier, nf_n, retried_n = f_frontier.result()
-                if f_hs is not None:
-                    f_hs.result()
-
-        if cfg.ckpt_dir:
-            # the parquet write materialized the frontier; one cheap
-            # re-read agg on the committed files
-            nf_n, retried_n = frontier.agg(
-                F.count(F.lit(1)), F.sum(F.col("dont_filter").cast("long"))
-            ).first()
-        frontier_n = int(nf_n)
+        # release the wave's dims and what the persisted states replaced
+        if scores is not None:
+            ckpt.release(scores)
         if bo is not None:
-            # the wave's backoff dim is fully consumed (quarantine
-            # anti-join, eff_delays, max_eff) once the frontier/seen/
-            # sketch tail jobs above have materialized — release it so
-            # cached dims don't accumulate one-per-wave on long crawls
             bo.unpersist()
-        if res.candidates is not None:
-            res.candidates.unpersist()  # next frontier is materialized now
-        if not cfg.keep_wave_caches and res.fetched is not None:
-            # all consumers (metrics agg, checkpoint, part_metrics) have
-            # run; release the wave's payload cache so executor storage
-            # stays O(1) in wave count on long crawls
+        res.candidates.unpersist()
+        if not cfg.keep_wave_caches:
+            # every consumer has run; release the wave's payload cache
+            # (and its lazy frames with it) so executor storage stays
+            # O(1) in wave count on long crawls
             res.fetched.unpersist()
-            res.fetched = None
-            res.parsed = None
-        if not is_final:
-            res.retried = int(retried_n or 0)
-            res.expanded = int(nf_n) - res.retried
+            res.fetched = res.parsed = res.candidates = None
+            res.part_metrics = res.gate_metrics = None
+        for st in states:
+            if st.replaced is not None and not (
+                st.wave_input and cfg.keep_wave_caches
+            ):
+                ckpt.release(st.replaced)
+            st.replaced = None
         res.wall_s = time.time() - t_wave
 
         if cfg.ckpt_dir:
-            ckpt.write_metrics(
-                cfg.ckpt_dir,
-                wave,
-                {
-                    "wave": wave,
-                    "scheduled": res.scheduled,
-                    "hits": res.hits,
-                    "misses": res.misses,
-                    "retried": res.retried,
-                    "expanded": res.expanded,
-                    "parsed_docs": res.parsed_docs,
-                    "next_start_ts": res.next_start_ts,
-                },
-            )
+            ckpt.write_metrics(cfg.ckpt_dir, wave, {
+                k: getattr(res, k) for k in (*WAVE_METRICS, "next_start_ts")
+            })
 
+    if hit_log is not None and hit_log.value is not None:
+        ckpt.release(hit_log.value)  # nothing the result returns reads it
     if own_layout:
         pages_kv.unpersist()
     if links_kv is not None and links_prepped is None:
         links_kv.unpersist()
     if rmap is not None:
         rmap.unpersist()
-    out.seen = seen
+    out.seen = seen.value
     if fetch_logs:
-        log = fetch_logs[0]
-        for extra in fetch_logs[1:]:
-            log = log.unionByName(extra)
-        out.fetch_log = log
+        out.fetch_log = reduce(DataFrame.unionByName, fetch_logs)
     if parsed_frames:
-        p = parsed_frames[0]
-        for extra in parsed_frames[1:]:
-            p = p.unionByName(extra)
-        out.parsed = p
+        out.parsed = reduce(DataFrame.unionByName, parsed_frames)
     return out

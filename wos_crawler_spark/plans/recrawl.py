@@ -25,7 +25,9 @@ blobs the probe path already ships):
      cannot delete, so it REBUILDS from the surviving seen set (one
      distributed build — the cost the cuckoo flavor avoids),
    * frontier: the expired URLs re-enter the frontier with
-     ``lineage='recrawl:<reason>'`` and depth 0.
+     ``lineage='recrawl:<reason>'`` and depth 0,
+   * every other cross-wave state carries over unchanged (backoff
+     ``host_stats``, the OPIC hit log).
 3. ``run_crawl(resume=True)`` then re-fetches exactly the evicted
    URLs through the normal robots/politeness/dedup machinery — no
    special-case branch in the wave loop.
@@ -39,7 +41,7 @@ from pyspark.sql import functions as F
 from wos_crawler_spark.functions.urlnorm import with_url_canon
 from wos_crawler_spark.operators import checkpoint as ckpt
 from wos_crawler_spark.operators.bloom import bloom_from_bytes
-from wos_crawler_spark.plans.crawl import FRONTIER_COLS, CrawlConfig
+from wos_crawler_spark.plans.crawl import CrawlConfig, frontier_rows
 
 
 def stale_pages(pages: DataFrame, seen: DataFrame, cutoff_ts) -> DataFrame:
@@ -105,15 +107,11 @@ def evict_for_recrawl(
             exp.select("url_hash"), seen, cfg.bloom_capacity, cfg.bloom_fpp
         )
 
-    readmit = (
-        exp.withColumn("priority", F.lit(priority))
-        .withColumn("depth", F.lit(0))
-        .withColumn("discovered_wave", F.lit(wave))
-        .withColumn("attempt", F.lit(0))
-        .withColumn("query_id", F.lit(-1).cast("long"))
-        .withColumn("dont_filter", F.lit(False))
-        .withColumn("lineage", F.lit(f"recrawl:{reason}"))
-        .select(FRONTIER_COLS)
+    readmit = frontier_rows(
+        exp.withColumn("priority", F.lit(priority)).withColumn(
+            "query_id", F.lit(-1).cast("long")
+        ),
+        F.lit(0), wave, F.lit(f"recrawl:{reason}"),
     )
     frontier = ckpt.read_frontier(spark, ckpt_dir, last).unionByName(readmit)
     evicted_keys = exp.select("url_hash").withColumn("wave", F.lit(wave))
