@@ -3745,60 +3745,13 @@ def _hits_oracle_sql(n_iter: int = 4) -> str:
 
 
 def q_graph_opic_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous OPIC importance (Abiteboul et al. 2003 — the
-    online crawl-priority estimate; operators/linkgraph.py::opic), 5
-    rounds over the shared host graph. 6-dp output absorbs the
-    rounding protocol's residual."""
-    from wos_crawler_spark.operators.linkgraph import opic
+    """Integer OPIC importance (Abiteboul et al. 2003 — the online
+    crawl-priority estimate; operators/linkgraph.py::opic_int), 5
+    rounds over the shared host graph. Integer cash, so the oracle
+    matches bit for bit with no rounding protocol."""
+    from wos_crawler_spark.operators.linkgraph import opic_int
 
-    s = opic(_pr_edges(spark, sf_dir), n_iter=5)
-    return s.select(
-        "node",
-        F.round("importance", 6).alias("importance_r6"),
-        F.round("history", 6).alias("history_r6"),
-    )
-
-
-def _opic_oracle_sql(n_iter: int = 5) -> str:
-    """Unrolled synchronous OPIC mirroring linkgraph.opic
-    expression-for-expression (12-dp contribs, 9-dp state, uniform
-    virtual-page redistribution of dangling cash)."""
-    ctes = [
-        _PR_GRAPH_CTES.strip().rstrip(),
-        "s0 AS MATERIALIZED (SELECT node,"
-        " round(1.0/(SELECT cnt FROM nn), 9) AS cash,"
-        " 0.0 AS history FROM nodes)",
-    ]
-    for k in range(1, n_iter + 1):
-        p = k - 1
-        ctes += [
-            f"dg{p} AS MATERIALIZED (SELECT coalesce(sum(cash), 0.0)"
-            f" AS dm FROM s{p} WHERE node NOT IN (SELECT src FROM ed))",
-            f"c{k} AS MATERIALIZED (SELECT e.dst AS node,"
-            f" sum(round(s.cash / o.outd, 12)) AS s"
-            f" FROM ed e JOIN s{p} s ON e.src = s.node"
-            f" JOIN outd o ON e.src = o.src GROUP BY e.dst)",
-            f"s{k} AS MATERIALIZED (SELECT n.node,"
-            f" round(coalesce(c.s, 0.0)"
-            f" + (SELECT dm FROM dg{p})/(SELECT cnt FROM nn), 9)"
-            f" AS cash,"
-            f" round(s.history + s.cash, 9) AS history"
-            f" FROM nodes n"
-            f" JOIN s{p} s USING (node)"
-            f" LEFT JOIN c{k} c ON c.node = n.node)",
-        ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f""",
-        th AS (SELECT sum(history) AS t FROM s{n_iter})
-        SELECT node,
-               round(round((history + cash)
-                     / ((SELECT t FROM th) + 1.0), 9), 6)
-                   AS importance_r6,
-               round(history, 6) AS history_r6
-        FROM s{n_iter}
-    """
-    )
+    return opic_int(_pr_edges(spark, sf_dir), n_iter=5)
 
 
 def q_w1_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3842,40 +3795,45 @@ def q_w1_opic_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _opic_int_oracle_sql(n_iter: int = 3, scale: int = 1_000_000) -> str:
-    """Unrolled INTEGER OPIC twin of linkgraph.opic_int over the
-    w1_opic_priority fixture graph — floor divisions and conserved
-    remainders restated round by round; no rounding protocol because
-    there are no floats."""
+#: The w1_opic_priority fixture graph (mirrors q_w1_opic_priority's
+#: edges), in the CTE shape _opic_int_oracle_sql reads.
+_W1_GRAPH_CTES = """
+    e0 AS (SELECT 'u' || (i % 15) AS src, 'u' || ((i*7+3) % 20) AS dst
+           FROM (SELECT unnest(range(0, 45)) AS i)),
+    ed AS MATERIALIZED (SELECT DISTINCT src, dst FROM e0),
+    nodes AS MATERIALIZED (SELECT src AS node FROM ed
+                           UNION SELECT dst FROM ed),
+    nn AS (SELECT count(*) AS cnt FROM nodes),
+    outd AS MATERIALIZED (SELECT src, count(*) AS outd FROM ed GROUP BY src)
+"""
+
+
+def _opic_int_oracle_sql(
+    graph_ctes: str, n_iter: int, scale: int = 1_000_000
+) -> str:
+    """Unrolled INTEGER OPIC twin of linkgraph.opic_int over the graph
+    ``graph_ctes`` defines (``ed``, ``nodes``, ``nn(cnt)``, ``outd``) —
+    floor divisions and conserved remainders restated round by round;
+    no rounding protocol because there are no floats. Ends with the CTE
+    ``sc(node, importance)``; the caller appends its own SELECT."""
+    n = "(SELECT cnt FROM nn)"
     ctes = [
-        "e0 AS (SELECT 'u' || (i % 15) AS src,"
-        " 'u' || ((i*7+3) % 20) AS dst"
-        " FROM (SELECT unnest(range(0, 45)) AS i))",
-        "ed AS MATERIALIZED (SELECT DISTINCT src, dst FROM e0)",
-        "nodes AS MATERIALIZED (SELECT DISTINCT node FROM"
-        " (SELECT src AS node FROM ed UNION SELECT dst FROM ed))",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        "outd AS MATERIALIZED (SELECT src, COUNT(*) AS outd"
-        " FROM ed GROUP BY src)",
-        f"s0 AS MATERIALIZED (SELECT node,"
-        f" {scale} // (SELECT n FROM nn) AS cash,"
+        graph_ctes.strip().rstrip(),
+        f"s0 AS MATERIALIZED (SELECT node, {scale} // {n} AS cash,"
         f" CAST(0 AS BIGINT) AS hist FROM nodes)",
-        f"p0 AS (SELECT {scale} - (SELECT n FROM nn)"
-        f" * ({scale} // (SELECT n FROM nn)) AS pool)",
+        f"p0 AS (SELECT {scale} - {n} * ({scale} // {n}) AS pool)",
     ]
     for k in range(1, n_iter + 1):
         p = k - 1
         ctes += [
-            f"dg{k} AS (SELECT COALESCE(SUM(cash), 0) AS dm FROM s{p}"
-            f" WHERE node NOT IN (SELECT src FROM ed))",
-            f"rs{k} AS (SELECT COALESCE(SUM(s.cash"
-            f" - o.outd * (s.cash // o.outd)), 0) AS rs"
-            f" FROM s{p} s JOIN outd o ON o.src = s.node)",
-            f"i{k} AS (SELECT (SELECT pool FROM p{p})"
-            f" + (SELECT dm FROM dg{k}) + (SELECT rs FROM rs{k}) AS tin)",
-            f"sh{k} AS (SELECT (SELECT tin FROM i{k})"
-            f" // (SELECT n FROM nn) AS share)",
-            f"p{k} AS (SELECT (SELECT tin FROM i{k}) - (SELECT n FROM nn)"
+            # the pool's inflow: dangling nodes' whole cash, the floor
+            # residue of the rest, and the carried pool
+            f"i{k} AS (SELECT (SELECT pool FROM p{p}) + SUM(CASE WHEN"
+            f" o.outd IS NULL THEN s.cash"
+            f" ELSE s.cash - o.outd * (s.cash // o.outd) END) AS tin"
+            f" FROM s{p} s LEFT JOIN outd o ON o.src = s.node)",
+            f"sh{k} AS (SELECT (SELECT tin FROM i{k}) // {n} AS share)",
+            f"p{k} AS (SELECT (SELECT tin FROM i{k}) - {n}"
             f" * (SELECT share FROM sh{k}) AS pool)",
             f"c{k} AS MATERIALIZED (SELECT e.dst AS node,"
             f" SUM(s.cash // o.outd) AS s"
@@ -3887,21 +3845,11 @@ def _opic_int_oracle_sql(n_iter: int = 3, scale: int = 1_000_000) -> str:
             f" FROM nodes n JOIN s{p} s USING (node)"
             f" LEFT JOIN c{k} c ON c.node = n.node)",
         ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f""",
-        sc AS (SELECT node, hist + cash AS importance FROM s{n_iter}),
-        fr AS (SELECT 'u' || k AS url, 'h' || (k % 4) AS host
-               FROM (SELECT unnest(range(0, 20)) AS k))
-        SELECT f.url, f.host,
-               CAST(s.importance AS BIGINT) AS priority,
-               CAST(row_number() OVER (
-                     PARTITION BY f.host
-                     ORDER BY s.importance DESC, f.url ASC
-                   ) AS BIGINT) AS fetch_rank
-        FROM fr f JOIN sc s ON s.node = f.url
-    """
+    ctes.append(
+        f"sc AS (SELECT node, CAST(hist + cash AS BIGINT) AS importance"
+        f" FROM s{n_iter})"
     )
+    return "WITH " + ",\n".join(ctes)
 
 
 def q_graph_pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5863,8 +5811,22 @@ def oracle_sql() -> dict[str, str]:
         """,
         "graph_pagerank_hosts": _pagerank_oracle_sql(),
         "graph_hits_hosts": _hits_oracle_sql(),
-        "graph_opic_hosts": _opic_oracle_sql(),
-        "w1_opic_priority": _opic_int_oracle_sql(),
+        "graph_opic_hosts": _opic_int_oracle_sql(_PR_GRAPH_CTES, n_iter=5)
+        + "\nSELECT node, importance FROM sc",
+        # integer OPIC scores as the frontier priority, then the
+        # per-host fetch rank
+        "w1_opic_priority": _opic_int_oracle_sql(_W1_GRAPH_CTES, n_iter=3)
+        + """,
+        fr AS (SELECT 'u' || k AS url, 'h' || (k % 4) AS host
+               FROM (SELECT unnest(range(0, 20)) AS k))
+        SELECT f.url, f.host,
+               s.importance AS priority,
+               CAST(row_number() OVER (
+                     PARTITION BY f.host
+                     ORDER BY s.importance DESC, f.url ASC
+                   ) AS BIGINT) AS fetch_rank
+        FROM fr f JOIN sc s ON s.node = f.url
+    """,
         "text_script_profile": _script_profile_oracle_sql(),
         "corpus_delta": """
             -- the whole diff restated from doc_id arithmetic + md5

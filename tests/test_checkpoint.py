@@ -267,3 +267,37 @@ def test_persistent_rdds_flat_in_wave_count(spark):
         return len(set(jsc.getPersistentRDDs().keySet()) - before)
 
     assert leftover(2) == leftover(6)
+
+
+@pytest.mark.parametrize("with_ckpt", [True, False], ids=["ckpt", "no_ckpt"])
+def test_tail_jobs_keep_callers_job_group(spark, tmp_path, with_ckpt):
+    """The tail persists its states from driver threads; their jobs
+    still carry the caller's job group, so every job a 3-wave crawl
+    with backoff and OPIC starts is attributed to the crawl."""
+    pages, seeds, links, robots = _world(spark)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def mark(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return st.getJobIdsForGroup(group)
+
+    group = f"crawl-{with_ckpt}"
+    try:
+        lo = max(mark(f"before-{group}"))
+        sc.setJobGroup(group, group)
+        run_crawl(
+            spark, pages, seeds, links, robots,
+            CrawlConfig(delay_s=1.0, quota=4, max_depth=3, rows_per_bucket=8,
+                        parse=False, backoff=True, opic_priority=True,
+                        max_waves=3,
+                        ckpt_dir=str(tmp_path / "ck") if with_ckpt else None),
+        )
+        started = set(range(lo + 1, min(mark(f"after-{group}"))))
+        outside = started - set(st.getJobIdsForGroup(group))
+        assert not outside, f"{len(outside)} of {len(started)} jobs outside"
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)

@@ -1,13 +1,17 @@
 """Link-graph analytics: host-edge aggregation, degrees, PageRank
 (mass conservation, dangling redistribution, python-twin equality),
-rank-driven frontier priority."""
+HITS and integer OPIC (python-twin equality), the scorers' checkpoint
+release, rank-driven frontier priority."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from wos_crawler_spark.operators.linkgraph import (
     degrees,
+    hits,
     host_edges,
+    opic_int,
+    opic_int_python,
     pagerank,
     rank_priority,
 )
@@ -100,17 +104,14 @@ def test_rank_priority(spark):
 
 
 def test_pagerank_empty_graph_raises(spark):
-    import pytest as _pytest
-
     empty = spark.createDataFrame([], "src string, dst string")
-    with _pytest.raises(ValueError, match="empty edge set"):
+    with pytest.raises(ValueError, match="empty edge set"):
         pagerank(empty)
 
 
 def test_url_rank_drives_quota(spark):
     """URL-keyed PageRank feeding schedule_wave's W1 quota: the
     host's single slot goes to its highest-ranked URL."""
-    from wos_crawler_spark.operators.linkgraph import pagerank, rank_priority
     from wos_crawler_spark.operators.politeness import schedule_wave
 
     # u_hot is linked by three pages; u_cold by one
@@ -148,8 +149,6 @@ def _hits_twin(pairs, n_iter):
 
 
 def test_hits_python_twin_and_semantics(spark):
-    from wos_crawler_spark.operators.linkgraph import hits
-
     # hub -> {a1, a2, a3}; a1..a3 also pointed at by spokes; one
     # isolated-ish edge pair
     pairs = (
@@ -175,66 +174,44 @@ def test_hits_python_twin_and_semantics(spark):
 
 
 def test_hits_empty_raises(spark):
-    from wos_crawler_spark.operators.linkgraph import hits
-
     df = spark.createDataFrame([], "src string, dst string")
-    import pytest
-
     with pytest.raises(ValueError):
         hits(df)
 
 
-def _opic_twin(pairs, n_iter):
-    edges = sorted(set(pairs))
-    nodes = sorted({v for e in edges for v in e})
-    n = len(nodes)
-    outd = {}
-    for s, _ in edges:
-        outd[s] = outd.get(s, 0) + 1
-    dangling = [v for v in nodes if v not in outd]
-    cash = {v: round(1.0 / n, 9) for v in nodes}
-    hist = {v: 0.0 for v in nodes}
-    for _ in range(n_iter):
-        dm = sum(cash[v] for v in dangling)
-        inflow = {v: 0.0 for v in nodes}
-        for s, d in edges:
-            inflow[d] += round(cash[s] / outd[s], 12)
-        hist = {v: round(hist[v] + cash[v], 9) for v in nodes}
-        cash = {v: round(inflow[v] + dm / n, 9) for v in nodes}
-    th = sum(hist.values())
-    imp = {
-        v: round((hist[v] + cash[v]) / (th + 1.0), 9) for v in nodes
-    }
-    return imp, cash, hist
-
-
 def test_opic_python_twin_and_conservation(spark):
-    from wos_crawler_spark.operators.linkgraph import opic
-
     pairs = (
         [("hub", f"a{i}") for i in (1, 2, 3)]
         + [(f"s{j}", "hub") for j in range(4)]
         + [("a1", "sink")]  # sink is dangling
     )
+    n_iter, scale = 5, 1_000_000
     df = spark.createDataFrame(pairs, "src string, dst string")
-    rows = opic(df, n_iter=5).collect()
-    got = {r.node: round(r.importance, 6) for r in rows}
-    imp_t, cash_t, hist_t = _opic_twin(pairs, 5)
-    assert got == {v: round(imp_t[v], 6) for v in imp_t}
-    # conservation: cash sums to 1, history to n_iter (within rounding)
-    assert abs(sum(r.cash for r in rows) - 1.0) < 1e-6
-    assert abs(sum(r.history for r in rows) - 5.0) < 1e-6
+    got = {r.node: r.importance for r in opic_int(df, n_iter, scale).collect()}
+    assert got == opic_int_python(pairs, n_iter, scale)
+    # conservation: each of the n_iter+1 banked cash vectors sums to
+    # scale minus a pool remainder below n
+    lost = (n_iter + 1) * scale - sum(got.values())
+    assert 0 <= lost < (n_iter + 1) * len(got)
     # the hub (pointed at by 4 spokes) outranks every spoke
-    assert all(
-        got["hub"] > got[f"s{j}"] for j in range(4)
-    )
+    assert all(got["hub"] > got[f"s{j}"] for j in range(4))
 
 
 def test_opic_empty_raises(spark):
-    from wos_crawler_spark.operators.linkgraph import opic
-
-    import pytest
-
     df = spark.createDataFrame([], "src string, dst string")
-    with pytest.raises(ValueError):
-        opic(df)
+    with pytest.raises(ValueError, match="empty edge set"):
+        opic_int(df)
+
+
+@pytest.mark.parametrize("n_iter", [2, 8])
+@pytest.mark.parametrize("scorer", [pagerank, hits, opic_int],
+                         ids=["pagerank", "hits", "opic_int"])
+def test_scorer_releases_its_checkpoints(spark, scorer, n_iter):
+    """Every round's superseded state and the graph prep are freed
+    (``DataFrame.unpersist`` does not free a localCheckpoint): only the
+    result's own state stays persistent, whatever the round count."""
+    pairs = [(f"h{i % 13}", f"h{(i * 7 + 3) % 17}") for i in range(60)]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    scorer(_edges(spark, pairs), n_iter=n_iter).collect()
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1

@@ -1,39 +1,55 @@
 """Host-level link-graph analytics over the crawl's links table:
-degrees, PageRank, and rank-driven frontier prioritization.
+degrees, three link-graph scorers (PageRank, HITS and integer OPIC)
+and rank-driven frontier prioritization.
 
 The reference crawler walks WoS result pages in query order; a
 web-frontier scheduler instead prioritizes by link-graph authority
 (the classic crawl-ordering result: Cho, Garcia-Molina & Page 1998 —
 PageRank-ordered crawling finds important pages first). This module
-gives the W1 priority-queue frontier (operators/politeness.py) a
-principled priority: PageRank over the HOST graph.
+gives the W1 priority-queue frontier (operators/politeness.py) its
+priority: PageRank or HITS hubs/authorities over the HOST graph, and
+integer OPIC (Abiteboul, Preda & Cobena 2003), the online importance
+estimate the crawl's score-driven frontier uses
+(``CrawlConfig.opic_priority``).
 
 Scale design:
 
 - The URL-level graph at 10^10 URLs is too big to iterate cheaply —
-  but crawl scheduling happens per host anyway (politeness), so the
-  operator first collapses links to the host graph (one agg shuffle;
-  hosts are ~10^7 even at full web scale) and iterates there.
-- Each PageRank iteration is one join (ranks ⋈ edges on src) + one
-  agg (sum contribs by dst) — the textbook two-shuffle iteration over
-  ``(node, rank)`` pairs only; per-iteration ``localCheckpoint``
-  truncates lineage exactly like ``min_label_components``.
-- Dangling mass (nodes with no out-links) is folded back uniformly
-  each iteration; its sum is a one-row aggregate (driver scalar —
-  same bounded-collect class as the Bloom fold).
+  but crawl scheduling happens per host anyway (politeness), so
+  :func:`host_edges` first collapses links to the host graph (one agg
+  shuffle; hosts are ~10^7 even at full web scale).
+- Every scorer runs on one graph prep (:func:`_graph`): the distinct
+  edges and the node table with each node's out-degree, both
+  checkpointed once, and the node count (an empty edge set raises).
+- Every scorer iterates in one round loop (:func:`_rounds`) over a
+  per-node state. A round gathers contributions with one edge join
+  over ``(node, score)`` pairs only — never text; PageRank and OPIC
+  carry the out-degree on the state, so dangling nodes are the rows
+  with ``outd == 0`` and no degree or dangling frame is joined.
+  Dangling mass, HITS's normalization sums and OPIC's pool are
+  one-row aggregates (driver scalars — the same bounded-collect class
+  as the Bloom fold).
+- Each round's state is a ``localCheckpoint`` (lineage truncation).
+  The loop frees the state a round replaces, and the prep's tables,
+  with ``checkpoint.release`` — ``DataFrame.unpersist`` does not free
+  a localCheckpoint — so only the result's own state stays.
 
-Cross-engine determinism: floating-point PageRank is sum-order
-dependent, so every contribution is rounded to 12 dp before the sum
-and every rank to ``round_dp`` (default 9) after each iteration.
+Cross-engine determinism: floating-point PageRank and HITS are
+sum-order dependent, so every contribution is rounded to 12 dp before
+the sum and every score to ``round_dp`` (default 9) after each round.
 Host-graph sums aggregate ≤ fan-in terms of magnitude ≤ 1 with ulp
 ~1e-16, so accumulated error stays orders of magnitude below both
-rounding grids — Spark and the unrolled-CTE DuckDB oracle produce
-bit-identical ranks.
+rounding grids — Spark and the unrolled-CTE DuckDB oracles produce
+bit-identical scores. Integer OPIC needs no rounding protocol: its
+cash is integer units, bit-identical across Spark, its python twin
+and its SQL oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wos_crawler_spark.functions.urlnorm import url_host
@@ -72,6 +88,45 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def _graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """The prep every scorer shares: the distinct ``(src, dst)`` edges,
+    the ``(node, outd)`` table of every endpoint with its out-degree
+    (0 for a dangling node), both checkpointed, and the node count.
+    Raises on an empty edge set."""
+    ed = edges.select("src", "dst").distinct().localCheckpoint()
+    nodes = (
+        ed.select(F.col("src").alias("node"), F.lit(1).alias("o"))
+        .unionByName(ed.select(F.col("dst").alias("node"), F.lit(0).alias("o")))
+        .groupBy("node")
+        .agg(F.sum("o").alias("outd"))
+        .localCheckpoint()
+    )
+    n = nodes.count()
+    if n == 0:
+        release(ed)
+        release(nodes)
+        raise ValueError("empty edge set (no nodes to score)")
+    return ed, nodes, n
+
+
+def _rounds(
+    ed: DataFrame,
+    state: DataFrame,
+    n_iter: int,
+    step: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """``n_iter`` rounds of ``state = step(state)``, each round's state
+    checkpointed. The state a round replaces is released — the first
+    round's initial state is a projection of the prep's node table, so
+    that table goes with it — and the edge table after the last round,
+    so only the returned state's own checkpoint stays."""
+    for _ in range(n_iter):
+        prev, state = state, step(state).localCheckpoint()
+        release(prev)
+    release(ed)
+    return state
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = 5,
@@ -82,37 +137,17 @@ def pagerank(
     teleport and uniform dangling-mass redistribution. Unweighted
     (each distinct out-edge carries rank/out_degree — the classic
     formulation, and the one the SQL oracle unrolls)."""
-    ed = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
-        ed.select(F.col("src").alias("node"))
-        .unionByName(ed.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge set (no nodes to rank)")
-    outd = ed.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
+    ed, nodes, n = _graph(edges)
 
-    ranks = nodes.select(
-        "node", F.round(F.lit(1.0 / n), round_dp).alias("rank")
-    ).localCheckpoint()
-    dangling = nodes.join(ed.select("src").distinct(),
-                          nodes.node == F.col("src"), "left_anti")
-
-    for _ in range(n_iter):
+    def step(ranks: DataFrame) -> DataFrame:
         dm = (
-            ranks.join(F.broadcast(dangling), "node", "semi")
+            ranks.filter(F.col("outd") == 0)
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
             .first()[0]
         )
         contribs = (
             ed.join(ranks, ed.src == ranks.node)
-            .join(outd, "src")
-            .select(
-                "dst",
-                F.round(F.col("rank") / F.col("outd"), 12).alias("c"),
-            )
+            .select("dst", F.round(F.col("rank") / F.col("outd"), 12).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
@@ -122,14 +157,14 @@ def pagerank(
             * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm / n)),
             round_dp,
         )
-        prev = ranks
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .select("node", new_rank.alias("rank"))
-            .localCheckpoint()
+        return ranks.join(contribs, ranks.node == contribs.dst, "left").select(
+            "node", "outd", new_rank.alias("rank")
         )
-        prev.unpersist()
-    return ranks
+
+    ranks = nodes.select(
+        "node", "outd", F.round(F.lit(1.0 / n), round_dp).alias("rank")
+    )
+    return _rounds(ed, ranks, n_iter, step).select("node", "rank")
 
 
 def rank_priority(frontier: DataFrame, ranks: DataFrame,
@@ -178,172 +213,59 @@ def hits(
     expression). The fixed point is the same principal eigenvector
     direction; only the scale convention differs (scores sum to 1).
 
-    Shuffle shape per iteration: two edge-keyed join+agg exchanges
-    over (node, score) pairs only — edges/scores, never text — plus
-    two driver-scale normalization sums; ``localCheckpoint`` per
-    iteration truncates lineage exactly like pagerank."""
-    ed = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
-        ed.select(F.col("src").alias("node"))
-        .unionByName(ed.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("hits: empty edge set (no nodes to score)")
+    Per round: two edge-keyed join+agg exchanges plus two driver-scale
+    normalization sums, in the shared round loop."""
+    ed, nodes, n = _graph(edges)
 
-    init = F.round(F.lit(1.0 / n), round_dp)
-    scores = nodes.select(
-        "node", init.alias("hub"), init.alias("auth")
-    ).localCheckpoint()
-
-    for _ in range(n_iter):
+    def step(scores: DataFrame) -> DataFrame:
         # authorities from hubs (in-edge gather)
         araw = (
-            ed.join(
-                scores.select(F.col("node").alias("src"), "hub"), "src"
-            )
+            ed.join(scores.select(F.col("node").alias("src"), "hub"), "src")
             .select("dst", F.round(F.col("hub"), 12).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        a_df = nodes.join(
-            araw, nodes.node == araw.dst, "left"
-        ).select("node", F.coalesce(F.col("s"), F.lit(0.0)).alias("ar"))
+        a_df = scores.join(araw, scores.node == araw.dst, "left").select(
+            "node", F.coalesce(F.col("s"), F.lit(0.0)).alias("ar")
+        )
         sa = a_df.agg(F.sum("ar")).first()[0]
         a_df = a_df.select(
             "node", F.round(F.col("ar") / F.lit(sa), round_dp).alias("auth")
         )
         # hubs from the NEW authorities (out-edge gather)
         hraw = (
-            ed.join(
-                a_df.select(F.col("node").alias("dst"), "auth"), "dst"
-            )
+            ed.join(a_df.select(F.col("node").alias("dst"), "auth"), "dst")
             .select("src", F.round(F.col("auth"), 12).alias("c"))
             .groupBy("src")
             .agg(F.sum("c").alias("s"))
         )
-        h_df = nodes.join(
-            hraw, nodes.node == hraw.src, "left"
-        ).select("node", F.coalesce(F.col("s"), F.lit(0.0)).alias("hr"))
+        h_df = scores.join(hraw, scores.node == hraw.src, "left").select(
+            "node", F.coalesce(F.col("s"), F.lit(0.0)).alias("hr")
+        )
         sh = h_df.agg(F.sum("hr")).first()[0]
         h_df = h_df.select(
             "node", F.round(F.col("hr") / F.lit(sh), round_dp).alias("hub")
         )
-        prev = scores
-        scores = (
-            h_df.join(a_df, "node").select("node", "hub", "auth")
-            .localCheckpoint()
-        )
-        prev.unpersist()
-    return scores
+        return h_df.join(a_df, "node").select("node", "hub", "auth")
 
-
-def opic(
-    edges: DataFrame,
-    n_iter: int = 5,
-    round_dp: int = 9,
-) -> DataFrame:
-    """``(node, importance, cash, history)`` — synchronous OPIC
-    (Abiteboul, Preda & Cobena 2003, "Adaptive On-Line Page
-    Importance Computation"): the importance estimate crawlers
-    schedule by WITHOUT a separate offline PageRank batch. Every node
-    starts with cash 1/n; each round, every node banks its cash into
-    its history and distributes it equally over its out-edges
-    (dangling cash redistributes uniformly — the paper's virtual
-    page); importance after T rounds is the banked history plus
-    residual cash, normalized by the total banked mass.
-
-    Differences from :func:`pagerank` worth having both: no damping
-    (OPIC's virtual page plays that role), and the HISTORY integral
-    smooths the estimate over rounds — a new high-cash node ranks
-    below an old consistently-cashed one, which is exactly the
-    freshness bias a crawl scheduler wants.
-
-    Same deterministic cross-engine protocol as pagerank: 12-dp
-    per-edge contributions, ``round_dp`` state per round, one
-    edge-keyed (node, cash) exchange + a driver-scale dangling sum
-    per round, ``localCheckpoint`` lineage truncation. Conservation
-    (Σcash = 1 every round, ΣH = t) is pinned by tests."""
-    ed = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
-        ed.select(F.col("src").alias("node"))
-        .unionByName(ed.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("opic: empty edge set")
-    outd = ed.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    dangling = nodes.join(
-        ed.select("src").distinct(), nodes.node == F.col("src"), "left_anti"
-    )
-
-    state = nodes.select(
-        "node",
-        F.round(F.lit(1.0 / n), round_dp).alias("cash"),
-        F.lit(0.0).alias("history"),
-    ).localCheckpoint()
-
-    for _ in range(n_iter):
-        dm = (
-            state.join(F.broadcast(dangling), "node", "semi")
-            .agg(F.coalesce(F.sum("cash"), F.lit(0.0)))
-            .first()[0]
-        )
-        contribs = (
-            ed.join(state.select("node", "cash"), ed.src == F.col("node"))
-            .join(outd, "src")
-            .select(
-                "dst",
-                F.round(F.col("cash") / F.col("outd"), 12).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        prev = state
-        state = (
-            state.join(contribs, state.node == contribs.dst, "left")
-            .select(
-                "node",
-                F.round(
-                    F.coalesce(F.col("s"), F.lit(0.0))
-                    + F.lit(dm / n),
-                    round_dp,
-                ).alias("cash"),
-                F.round(
-                    F.col("history") + F.col("cash"), round_dp
-                ).alias("history"),
-            )
-            .localCheckpoint()
-        )
-        prev.unpersist()
-
-    total_h = state.agg(F.sum("history")).first()[0]
-    return state.select(
-        "node",
-        F.round(
-            (F.col("history") + F.col("cash")) / F.lit(total_h + 1.0),
-            round_dp,
-        ).alias("importance"),
-        "cash",
-        "history",
-    )
+    init = F.round(F.lit(1.0 / n), round_dp)
+    scores = nodes.select("node", init.alias("hub"), init.alias("auth"))
+    return _rounds(ed, scores, n_iter, step)
 
 
 def opic_int(
     edges: DataFrame, n_iter: int = 3, scale: int = 1_000_000
 ) -> DataFrame:
     """``(node, importance)`` — INTEGER-exact synchronous OPIC
-    (Abiteboul, Preda & Cobena 2003), the crawl-PRIORITY variant of
-    :func:`opic`: all cash lives in integer units of ``1/scale``, so
-    the result is bit-identical across Spark, the python simulator
-    twin (:func:`opic_int_python` — CrawlConfig.opic_priority's
-    fetch-order parity rests on it) and an unrolled-CTE SQL oracle —
-    no floating-point rounding protocol needed, and the importance
-    integers drop straight into the frontier's int ``priority``.
+    (Abiteboul, Preda & Cobena 2003, "Adaptive On-Line Page Importance
+    Computation"), the importance estimate crawlers schedule by without
+    a separate offline PageRank batch: all cash lives in integer units
+    of ``1/scale``, so the result is bit-identical across Spark, the
+    python simulator twin (:func:`opic_int_python` —
+    CrawlConfig.opic_priority's fetch-order parity rests on it) and an
+    unrolled-CTE SQL oracle — no floating-point rounding protocol
+    needed, and the importance integers drop straight into the
+    frontier's int ``priority``.
 
     Protocol (every division is a floor; all remainders are
     conserved, never dropped):
@@ -360,86 +282,54 @@ def opic_int(
       frontier priority: ``(n_iter+1)·scale < 2^31``) and resolution
       survives the node count (``scale >> n``).
 
-    Scale shape mirrors :func:`opic`: per round one edge-keyed
-    exchange (contributions) + two driver-scalar aggregates (dangling
-    sum, residue sum); state is ``(node, cash, history)`` longs with
-    per-round ``localCheckpoint`` lineage truncation; every
-    intermediate checkpoint is released before returning, so only the
-    result's own state stays (``checkpoint.release`` frees it)."""
+    No damping (the virtual page plays that role), and the HISTORY
+    integral smooths the estimate over rounds — a new high-cash node
+    ranks below an old consistently-cashed one, the freshness bias a
+    crawl scheduler wants.
+
+    Per round: one driver scalar (the cash that travels no edge) and
+    one edge-keyed exchange (contributions), over ``(node, outd, cash,
+    history)`` longs in the shared round loop."""
     if n_iter < 1 or scale < 1:
         raise ValueError("n_iter and scale must be >= 1")
-    ed = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
-        ed.select(F.col("src").alias("node"))
-        .unionByName(ed.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("opic_int: empty edge set")
-    outd = ed.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    dangling = nodes.join(
-        ed.select("src").distinct(), nodes.node == F.col("src"), "left_anti"
-    )
-
+    ed, nodes, n = _graph(edges)
     unit = scale // n
     pool = scale - n * unit
-    state = nodes.select(
-        "node",
-        F.lit(unit).cast("long").alias("cash"),
-        F.lit(0).cast("long").alias("history"),
-    ).localCheckpoint()
+    # `div` = exact integral division on longs (F.floor(a/b) would
+    # round-trip through double — loses exactness past 2^53 at
+    # production scales)
+    quota = F.expr("cash div outd")
 
-    for _ in range(n_iter):
-        dm = (
-            state.join(F.broadcast(dangling), "node", "semi")
-            .agg(F.coalesce(F.sum("cash"), F.lit(0)))
-            .first()[0]
+    def step(state: DataFrame) -> DataFrame:
+        nonlocal pool
+        kept = F.when(F.col("outd") == 0, F.col("cash")).otherwise(
+            F.col("cash") - F.col("outd") * quota
         )
-        # `div` = exact integral division on longs (F.floor(a/b) would
-        # round-trip through double — loses exactness past 2^53 at
-        # production scales)
-        resid = (
-            state.join(outd, state.node == outd.src)
-            .agg(
-                F.coalesce(
-                    F.sum(
-                        F.col("cash")
-                        - F.col("outd") * F.expr("cash div outd")
-                    ),
-                    F.lit(0),
-                )
-            )
-            .first()[0]
-        )
-        pool_in = pool + int(dm) + int(resid)
+        pool_in = pool + state.agg(F.sum(kept)).first()[0]
         share = pool_in // n
         pool = pool_in - share * n
         contribs = (
-            ed.join(state.select("node", "cash"), ed.src == F.col("node"))
-            .join(outd, "src")
-            .select("dst", F.expr("cash div outd").alias("c"))
+            ed.join(state, ed.src == state.node)
+            .select("dst", quota.alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        prev = state
-        state = (
-            state.join(contribs, state.node == contribs.dst, "left")
-            .select(
-                "node",
-                (F.coalesce(F.col("s"), F.lit(0)) + F.lit(share))
-                .cast("long")
-                .alias("cash"),
-                (F.col("history") + F.col("cash")).cast("long").alias("history"),
-            )
-            .localCheckpoint()
+        return state.join(contribs, state.node == contribs.dst, "left").select(
+            "node",
+            "outd",
+            (F.coalesce(F.col("s"), F.lit(0)) + F.lit(share))
+            .cast("long")
+            .alias("cash"),
+            (F.col("history") + F.col("cash")).cast("long").alias("history"),
         )
-        release(prev)
 
-    release(ed)
-    release(nodes)
-    return state.select(
+    state = nodes.select(
+        "node",
+        "outd",
+        F.lit(unit).cast("long").alias("cash"),
+        F.lit(0).cast("long").alias("history"),
+    )
+    return _rounds(ed, state, n_iter, step).select(
         "node", (F.col("history") + F.col("cash")).cast("long").alias("importance")
     )
 

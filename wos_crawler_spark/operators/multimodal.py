@@ -789,7 +789,9 @@ def sample_frames_real(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     the frame on screen at ``t`` (``k = t·num // (1000·den)``) as a
     VALID P5 payload of its luma plane — directly composable with the
     image family (grid features, dHash near-dup across frames). One
-    zero-shuffle Arrow pass; payloads are read once."""
+    zero-shuffle Arrow pass; payloads are read once. A stream shorter
+    than 1 ms (``duration = nf·1000·den // num`` is 0) yields no frames;
+    that is not an error."""
     if every_ms < 1:
         raise ValueError("every_ms must be >= 1")
     schema = (

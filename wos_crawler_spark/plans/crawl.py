@@ -33,6 +33,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from wos_crawler_spark.functions.urlnorm import with_url_canon
 from wos_crawler_spark.operators import checkpoint as ckpt
@@ -1168,11 +1169,18 @@ def run_crawl(
             # the parallelism-independent stage-launch latency is paid
             # once instead of once per state. The frontier's counts
             # ride its persist job (observe — no separate count job).
+            # Each call inherits the caller's local properties (job
+            # group, description), which plain threads drop.
             with ThreadPoolExecutor(max_workers=len(states) + 1) as pool:
-                jobs = [pool.submit(st.persist, spark, cfg, wave) for st in states]
+                jobs = [
+                    pool.submit(inheritable_thread_target(st.persist),
+                                spark, cfg, wave)
+                    for st in states
+                ]
                 if cfg.ckpt_dir:
                     jobs.append(pool.submit(
-                        ckpt.write_frame, cfg.ckpt_dir, wave,
+                        inheritable_thread_target(ckpt.write_frame),
+                        cfg.ckpt_dir, wave,
                         "partition_metrics", res.part_metrics,
                     ))
                 for job in jobs:
