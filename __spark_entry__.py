@@ -1031,16 +1031,23 @@ def q_text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-shingle Jaccard near-dup pairs, blocked by source."""
-    from wos_crawler_spark.operators.textdedup import ngram_jaccard_pairs
+    """Exact word-unigram Jaccard near-dup pairs within one source:
+    the prefix-filtered self-join (textdedup.prefix_jaccard_pairs)
+    on the id ``(source, doc_id)``. Catalyst pushes the same-source
+    filter into the prefix-token join, which is then keyed by
+    ``(source, token)``: no cross-source pair is generated."""
+    from wos_crawler_spark.operators.textdedup import prefix_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, id_col="doc_id", text_col="text", n=1, threshold=0.5,
-        block_col="source",
-    )
-    return pairs.select(
-        "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard_r")
+    keyed = docs.select(F.struct("source", "doc_id").alias("_key"), "text")
+    return (
+        prefix_jaccard_pairs(keyed, id_col="_key", shingle_n=1, t_num=1, t_den=2)
+        .filter(F.col("id_a.source") == F.col("id_b.source"))
+        .select(
+            F.col("id_a.doc_id").alias("id_a"),
+            F.col("id_b.doc_id").alias("id_b"),
+            F.round(F.col("n_inter") / F.col("n_union"), 6).alias("jaccard_r"),
+        )
     )
 
 
@@ -1052,8 +1059,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         docs, id_col="doc_id", text_col="text", shingle_n=1,
-        k=32, bands=8, jaccard_threshold=0.5,
-    )
+        k=32, bands=8, t_num=1, t_den=2,
+    ).select("id_a", "id_b", (F.col("n_inter") / F.col("n_union")).alias("jaccard"))
 
 
 def q_dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,6 +41,21 @@ def test_opic_int_conservation_and_guards(spark):
         opic_int_python([])
 
 
+def test_opic_rescore_without_edges_keeps_frontier(spark):
+    """While no fetched hit has an out-link, the rescore returns the
+    frontier untouched and no scores: opic_int's empty-graph error is
+    the emptiness test. Any other ValueError still raises."""
+    from wos_crawler_spark.plans.crawl import CrawlConfig, _opic_rescore
+
+    frontier = spark.createDataFrame([("u1",)], "url string")
+    hits = spark.createDataFrame([("a", "a")], "url string, url_canon string")
+    links = spark.createDataFrame([("b", "c")], "src_url string, dst_url string")
+    out, scores = _opic_rescore(frontier, hits, links, CrawlConfig())
+    assert out is frontier and scores is None
+    with pytest.raises(ValueError, match="n_iter"):
+        _opic_rescore(frontier, hits, links, CrawlConfig(opic_iters=0))
+
+
 def test_full_crawl_parity_with_opic_priority(spark):
     """cfg.opic_priority wired through the wave loop: fetch order AND
     seen set must match the simulator computing identical integer

@@ -1,5 +1,6 @@
-"""Training-data text ops: exact dedup, MinHash LSH, SimHash, n-gram
-Jaccard, language ID, quality features, token counts, fingerprints."""
+"""Training-data text ops: exact dedup, MinHash LSH, SimHash, prefix
+Jaccard pairs, language ID, quality features, token counts,
+fingerprints."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,25 +37,26 @@ def test_exact_dedup(corpus):
 
 def test_minhash_lsh_finds_planted_near_dups(corpus):
     pairs = td.minhash_lsh_pairs(
-        corpus, shingle_n=3, k=32, bands=16, jaccard_threshold=0.5
+        corpus, shingle_n=3, k=32, bands=16, t_num=1, t_den=2
     ).collect()
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     for i in range(5):
         assert (i, 100 + i) in found, f"missed planted near-dup {i}"
-    # jaccard sanity: planted pairs differ by ~3 shingles out of ~38
+    # jaccard sanity: planted pairs differ by ~3 shingles out of ~38,
+    # checked exactly as 0.8 < n_inter / n_union < 1
     for r in pairs:
         if (r["id_a"], r["id_b"]) == (0, 100):
-            assert 0.8 < r["jaccard"] < 1.0
+            assert 8 * r["n_union"] < 10 * r["n_inter"] < 10 * r["n_union"]
 
 
 def test_minhash_no_false_pairs_between_unrelated(corpus):
     pairs = td.minhash_lsh_pairs(
-        corpus, shingle_n=3, k=32, bands=16, jaccard_threshold=0.5
+        corpus, shingle_n=3, k=32, bands=16, t_num=1, t_den=2
     ).collect()
     for r in pairs:
         # every surviving pair must be a planted one (a, a+100/a+200)
         assert r["id_b"] % 100 == r["id_a"], (r["id_a"], r["id_b"])
-        assert r["jaccard"] >= 0.5
+        assert 2 * r["n_inter"] >= r["n_union"]
 
 
 def test_minhash_lsh_dedup_clusters(corpus):
@@ -173,10 +175,40 @@ def test_simhash_bucket_cap_bounds_degenerate_blocks(spark):
 
 
 def test_ngram_jaccard_allpairs(corpus):
-    pairs = td.ngram_jaccard_pairs(corpus, n=3, threshold=0.5).collect()
-    found = {(r["id_a"], r["id_b"]) for r in pairs}
+    pairs = td.prefix_jaccard_pairs(corpus, shingle_n=3, t_num=1, t_den=2)
+    found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     for i in range(5):
         assert (i, 100 + i) in found
+
+
+def test_blank_text_pairs_across_jaccard_family(spark):
+    """NULL, "" and whitespace-only text all shingle to the singleton
+    set [""]: every Jaccard pair operator pairs the three blank rows
+    with each other at n_inter = n_union = 1, and nothing else."""
+    from wos_crawler_spark.operators import dedupindex as di
+
+    words = [" ".join(f"{c}{j}" for j in range(20)) for c in "ab"]
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "  \t "), (4, words[0]), (5, words[1])],
+        "doc_id long, text string",
+    )
+    blank = (1, 2, 3)
+    for n in (1, 3):
+        want = {(i, j, 1, 1) for i in blank for j in blank if i < j}
+        for op in (td.prefix_jaccard_pairs, td.minhash_lsh_pairs):
+            got = op(df, shingle_n=n, t_num=1, t_den=2).collect()
+            assert set(map(tuple, got)) == want, op.__name__
+        # the index queried with its own corpus, its stored tables in
+        # another column order (they are read by name): every blank row
+        # pairs with every blank row, each text doc only with itself
+        idx = di.dedup_index_build(df, shingle_n=n)
+        idx.bands = idx.bands.select(*reversed(idx.bands.columns))
+        idx.hashes = idx.hashes.select(*reversed(idx.hashes.columns))
+        m = 20 - n + 1
+        got = di.dedup_index_query(idx, df)
+        assert set(map(tuple, got.collect())) == {
+            (i, j, 1, 1) for i in blank for j in blank
+        } | {(4, 4, m, m), (5, 5, m, m)}
 
 
 def test_lang_id(spark):

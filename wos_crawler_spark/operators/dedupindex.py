@@ -11,8 +11,9 @@ xxhash64'd shingle set, 8 bytes/shingle instead of the string bytes).
 Query-time contract (pinned): candidates are band-bucket matches
 (same recall geometry as :func:`textdedup.minhash_lsh_pairs` — a pair
 with Jaccard j collides in ≥1 of b bands with the classic
-``1-(1-j^r)^b`` probability); verification is EXACT Jaccard over the
-**hashed** shingle sets with a RATIONAL threshold — ``n_inter·t_den ≥
+``1-(1-j^r)^b`` probability); verification is the family's shared
+exact verify (:func:`textdedup._verify_jaccard`) over the **hashed**
+shingle sets with a RATIONAL threshold — ``n_inter·t_den ≥
 n_union·t_num`` — so no float boundary exists anywhere. Hash-set
 Jaccard equals string-set Jaccard unless two distinct shingles of the
 same doc pair collide under xxhash64 (P ≈ |shingles|²/2⁶⁵ — and the
@@ -41,9 +42,9 @@ from pyspark.sql import functions as F
 
 from wos_crawler_spark.operators.textdedup import (
     _banded,
+    _shingle_sets,
+    _verify_jaccard,
     shingle_hashes,
-    shingles_from_words,
-    words_of,
 )
 
 
@@ -64,15 +65,9 @@ def _hashed_sets(
     sets and keeps n == |string set| otherwise-equal, but shingle
     arrays are already distinct by construction; it stays here as a
     guard so n can never exceed the true set size."""
-    w = docs.select(
-        F.col(id_col).alias("doc_id"), words_of(F.col(text_col)).alias("_w")
-    )
-    sh = w.select(
-        "doc_id", shingles_from_words(F.col("_w"), shingle_n).alias("_sh")
-    ).filter(F.size("_sh") > 0)
-    return sh.select(
-        "doc_id",
-        F.array_distinct(shingle_hashes(F.col("_sh"))).alias("h"),
+    return _shingle_sets(docs, id_col, text_col, shingle_n).select(
+        F.col("_id").alias("doc_id"),
+        F.array_distinct(shingle_hashes(F.col("_s"))).alias("h"),
     ).withColumn("n", F.size("h"))
 
 
@@ -152,47 +147,18 @@ def dedup_index_query(
     standing) pair that shares ≥1 LSH band bucket AND has exact
     hashed-shingle Jaccard ≥ t_num/t_den. The increment's text is
     read once; the standing corpus's text is never read at all."""
-    if not (0 < t_num <= t_den):
-        raise ValueError("need 0 < t_num <= t_den")
-    q_bands = _banded(
+    key = ["band_id", "band_hash"]
+    qb = _banded(
         new_docs, id_col, text_col, index.shingle_n, index.k, index.n_bands
-    ).withColumnRenamed("_id", "doc_id")
-    qb = q_bands.select(
-        F.col("doc_id").alias("id_new"), "band_id", "band_hash"
-    )
+    ).toDF("id_new", *key)
     if broadcast_query:
         qb = F.broadcast(qb)
+    # the stored tables are read by column name, never by position
     cand = (
-        qb.join(
-            index.bands.select(
-                F.col("doc_id").alias("id_idx"), "band_id", "band_hash"
-            ),
-            ["band_id", "band_hash"],
-        )
+        qb.join(index.bands.select("doc_id", *key).toDF("id_idx", *key), key)
         .select("id_new", "id_idx")
         .distinct()
     )
-    q_sets = _hashed_sets(new_docs, id_col, text_col, index.shingle_n).select(
-        F.col("doc_id").alias("id_new"),
-        F.col("h").alias("_hq"),
-        F.col("n").alias("_nq"),
-    )
-    x_sets = index.hashes.select(
-        F.col("doc_id").alias("id_idx"),
-        F.col("h").alias("_hx"),
-        F.col("n").alias("_nx"),
-    )
-    inter = F.size(F.array_intersect("_hq", "_hx"))
-    return (
-        cand.join(q_sets, "id_new")
-        .join(x_sets, "id_idx")
-        .withColumn("n_inter", inter)
-        .withColumn("n_union", F.col("_nq") + F.col("_nx") - inter)
-        .filter(F.col("n_inter") * t_den >= F.col("n_union") * t_num)
-        .select(
-            "id_new",
-            "id_idx",
-            F.col("n_inter").cast("long").alias("n_inter"),
-            F.col("n_union").cast("long").alias("n_union"),
-        )
-    )
+    q_sets = _hashed_sets(new_docs, id_col, text_col, index.shingle_n)
+    idx_sets = index.hashes.select("doc_id", "h", "n")
+    return _verify_jaccard(cand, q_sets, idx_sets, t_num, t_den)

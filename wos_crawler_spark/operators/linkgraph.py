@@ -20,7 +20,8 @@ Scale design:
   shuffle; hosts are ~10^7 even at full web scale).
 - Every scorer runs on one graph prep (:func:`_graph`): the distinct
   edges and the node table with each node's out-degree, both
-  checkpointed once, and the node count (an empty edge set raises).
+  checkpointed once, and the node count (an empty edge set raises
+  :class:`EmptyGraphError`).
 - Every scorer iterates in one round loop (:func:`_rounds`) over a
   per-node state. A round gathers contributions with one edge join
   over ``(node, score)`` pairs only — never text; PageRank and OPIC
@@ -88,11 +89,18 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+class EmptyGraphError(ValueError):
+    """The edge set a scorer was given is empty. A caller that treats
+    "no edges yet" as a normal state catches this, not ``ValueError``,
+    so bad arguments still raise."""
+
+
 def _graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     """The prep every scorer shares: the distinct ``(src, dst)`` edges,
     the ``(node, outd)`` table of every endpoint with its out-degree
     (0 for a dangling node), both checkpointed, and the node count.
-    Raises on an empty edge set."""
+    Raises :class:`EmptyGraphError` on an empty edge set — the node
+    count doubles as the emptiness test, so callers need no probe."""
     ed = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = (
         ed.select(F.col("src").alias("node"), F.lit(1).alias("o"))
@@ -105,7 +113,7 @@ def _graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     if n == 0:
         release(ed)
         release(nodes)
-        raise ValueError("empty edge set (no nodes to score)")
+        raise EmptyGraphError("empty edge set (no nodes to score)")
     return ed, nodes, n
 
 

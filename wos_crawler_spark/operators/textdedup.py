@@ -1,5 +1,6 @@
 """Large-scale text deduplication operators — the training-data
-pipeline family (exact, MinHash+LSH, SimHash, n-gram Jaccard).
+pipeline family (exact, MinHash+LSH, SimHash, exact set-similarity
+joins).
 
 These extend the engine beyond the reference's URL-level dedup (F1) to
 content-level dedup over the ``documents``/``pages`` corpus. Design
@@ -13,8 +14,11 @@ Scale notes (100 TB):
 - MinHash LSH shuffles (band_id, band_hash, doc_id) — k·|docs| small
   rows — then joins candidates only; the quadratic all-pairs join
   never materializes.
-- Jaccard verification re-reads shingles only for candidate pairs
-  (a semi-join-reduced scan at scale).
+- Every Jaccard pair operator (MinHash pairs, the prefix joins, the
+  dedup index) builds its shingle sets with :func:`_shingle_sets` and
+  checks its candidates with ONE verify, :func:`_verify_jaccard`: an
+  integer ``n_inter·t_den ≥ n_union·t_num`` test that re-reads the
+  sets only for candidate pairs (a semi-join-reduced scan at scale).
 """
 
 from __future__ import annotations
@@ -53,12 +57,47 @@ def shingles_from_words(w: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string> (deduplicated).
-    Convenience wrapper over :func:`shingles_from_words`; see its
-    materialization caveat — prefer the two-projection form in
-    anything hot."""
-    return shingles_from_words(words_of(c), n)
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> DataFrame:
+    """``(_id, _s, _n)`` — distinct word-shingle set + its size: the
+    one set builder of every Jaccard operator (LSH banding, the prefix
+    joins, the dedup index). Never empty: NULL, ``""`` and blank text
+    shingle to the singleton ``[""]``."""
+    w = df.select(
+        F.col(id_col).alias("_id"), words_of(F.col(text_col)).alias("_w")
+    )
+    return w.select(
+        "_id", shingles_from_words(F.col("_w"), shingle_n).alias("_s")
+    ).select("_id", "_s", F.size("_s").alias("_n"))
+
+
+def _verify_jaccard(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
+    t_num: int, t_den: int,
+) -> DataFrame:
+    """The one exact verify of every Jaccard pair operator.
+
+    ``cand`` is a two-column candidate frame ``(a, b)``; ``sets_a`` /
+    ``sets_b`` are the set tables of its two columns, each three
+    columns ``(id, set, size)`` in that order (:func:`_shingle_sets`,
+    or the dedup index's hashed sets). Returns ``(a, b, n_inter,
+    n_union)`` as longs for the pairs with ``n_inter·t_den ≥
+    n_union·t_num`` — integer cross-multiplication, no float boundary.
+    The set tables are re-read for candidate ids only (a
+    semi-join-reduced scan at scale)."""
+    if not (0 < t_num <= t_den):
+        raise ValueError("need 0 < t_num <= t_den")
+    a, b = cand.columns
+    inter = F.size(F.array_intersect("_sa", "_sb")).cast("long")
+    return (
+        cand.join(sets_a.toDF(a, "_sa", "_na"), a)
+        .join(sets_b.toDF(b, "_sb", "_nb"), b)
+        .withColumn("n_inter", inter)
+        .withColumn("n_union", F.col("_na") + F.col("_nb") - F.col("n_inter"))
+        .filter(F.col("n_inter") * t_den >= F.col("n_union") * t_num)
+        .select(a, b, "n_inter", "n_union")
+    )
 
 
 # -------------------------------------------------------- exact dedup
@@ -118,8 +157,6 @@ def paragraph_dedup(
     Both keys are high-cardinality and AQE-skew-splittable; no
     broadcast, no driver state.
     """
-    from pyspark.sql.window import Window
-
     arr = F.split(F.coalesce(F.col(text_col), F.lit("")), split_pattern)
     paras = df.select(
         F.col(id_col),
@@ -198,72 +235,41 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     k: int = 32,
     bands: int = 8,
-    jaccard_threshold: float = 0.7,
+    t_num: int = 7,
+    t_den: int = 10,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash banding + exact Jaccard verify.
 
-    Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard ≥
-    threshold. Candidate generation is the band-bucket self-join —
-    the classic shuffle-light LSH plan.
+    Returns ``(id_a, id_b, n_inter, n_union)`` with id_a < id_b and
+    Jaccard ≥ t_num/t_den (the family's integer test, see
+    :func:`_verify_jaccard`). Candidate generation is the band-bucket
+    self-join — the classic shuffle-light LSH plan.
 
     NOTE: pair enumeration is quadratic in band-bucket size; use this
     when pairs are the product (audits, verification). For dedup at
     scale use :func:`minhash_lsh_dedup`, which stays linear."""
-    base = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            words_of(F.col(text_col)).alias("_w"),
-        )
-        .select("_id", shingles_from_words(F.col("_w"), shingle_n).alias("_sh"))
-        .filter(F.size("_sh") > 0)
-    )
-
     # banding carries ONLY (id, band_id, band_hash) — ~k·|docs| small
-    # rows. The shingle arrays (the heavy column) never enter this
-    # shuffle; they rejoin below for candidate pairs only.
+    # rows. The shingle sets (the heavy column) never enter this
+    # shuffle; they rejoin in the verify for candidate pairs only.
     banded = _banded(df, id_col, text_col, shingle_n, k, bands)
-
+    key = ["band_id", "band_hash"]
     cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            ["band_id", "band_hash"],
-        )
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
+        banded.toDF("id_a", *key)
+        .join(banded.toDF("id_b", *key), key)
         .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b")
+        .distinct()
     )
-
-    # verify stage: exact Jaccard over candidate pairs only (the join
-    # back to `base` is the semi-join-reduced shingle re-read)
-    sh_a = base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    sh_b = base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sets_ = _shingle_sets(df, id_col, text_col, shingle_n)
+    return _verify_jaccard(cand, sets_, sets_, t_num, t_den)
 
 
 def _banded(df: DataFrame, id_col: str, text_col: str, shingle_n: int,
             k: int, bands: int) -> DataFrame:
     """(_id, band_id, band_hash) rows — the shared LSH front-end."""
     rows = k // bands
-    base = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            words_of(F.col(text_col)).alias("_w"),
-        )
-        .select("_id", shingles_from_words(F.col("_w"), shingle_n).alias("_sh"))
-        .filter(F.size("_sh") > 0)
-    )
-    hashed = base.select("_id", shingle_hashes(F.col("_sh")).alias("_h"))
+    sets_ = _shingle_sets(df, id_col, text_col, shingle_n)
+    hashed = sets_.select("_id", shingle_hashes(F.col("_s")).alias("_h"))
     sig = hashed.select("_id", minhash_signature(F.col("_h"), k).alias("_sig"))
     return sig.select(
         "_id", F.explode(minhash_bands(F.col("_sig"), bands, rows)).alias("_band")
@@ -554,47 +560,6 @@ def simhash_near_pairs(
     )
 
 
-# --------------------------------------------------- n-gram Jaccard
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    block_col: str | None = None,
-) -> DataFrame:
-    """Exact word-n-gram Jaccard over candidate pairs. Without a block
-    column this is all-pairs (test scale only!); with one (e.g.
-    ``source`` or an LSH bucket) it's the verify stage of a blocked
-    plan."""
-    sh = df.select(
-        F.col(id_col).alias("_id"),
-        *( [F.col(block_col).alias("_blk")] if block_col else [] ),
-        words_of(F.col(text_col)).alias("_w"),
-    ).select(
-        "_id",
-        *( ["_blk"] if block_col else [] ),
-        shingles_from_words(F.col("_w"), n).alias("_sh"),
-    )
-    join_keys = ["_blk"] if block_col else []
-    a = sh.select(*(["_blk"] if block_col else []),
-                  F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    b = sh.select(*(["_blk"] if block_col else []),
-                  F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    cand = (a.crossJoin(b) if not join_keys else a.join(b, join_keys)).filter(
-        F.col("id_a") < F.col("id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cand.withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 # --------------------------------------- exact-substring span dedup
 #
 # Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -680,7 +645,6 @@ def span_hashes_arrow(
                 for tk in toks:
                     offs.append(off)
                     off += len(tk) + 1
-                jb = joined.encode("utf-8")
                 # offs are CHARACTER offsets; md5 needs bytes — re-slice
                 # on the str (unicode-safe) then encode per window.
                 for p in range(len(toks) - L + 1):
@@ -818,18 +782,6 @@ def span_dedup_apply(
 # boundary anywhere, so the all-pairs DuckDB oracle is exact.
 
 
-def _shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
-    """``(_id, _s, _n)`` — distinct word-shingle set + its size."""
-    w = df.select(
-        F.col(id_col).alias("_id"), words_of(F.col(text_col)).alias("_w")
-    )
-    return w.select(
-        "_id", shingles_from_words(F.col("_w"), shingle_n).alias("_s")
-    ).select("_id", "_s", F.size("_s").alias("_n"))
-
-
 def _prefix_tokens(
     sets_: DataFrame, dfreq: DataFrame, t_num: int, t_den: int
 ) -> DataFrame:
@@ -885,22 +837,20 @@ def prefix_jaccard_join(
     keeps candidate buckets rare-token-keyed across both sides).
     All thresholds remain integer cross-multiplications — the
     brute-force A×B DuckDB oracle never sees a prefix."""
-    if not (0 < t_num <= t_den):
-        raise ValueError("need 0 < t_num <= t_den")
     sets_l = _shingle_sets(left, id_col, text_col, shingle_n)
     sets_r = _shingle_sets(right, id_col, text_col, shingle_n)
-    both = sets_l.select(F.explode("_s").alias("_t")).unionAll(
-        sets_r.select(F.explode("_s").alias("_t"))
+    dfreq = (
+        sets_l.unionAll(sets_r)
+        .select(F.explode("_s").alias("_t"))
+        .groupBy("_t")
+        .agg(F.count(F.lit(1)).alias("_df"))
     )
-    dfreq = both.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    pl = _prefix_tokens(sets_l, dfreq, t_num, t_den).select(
-        F.col("_id").alias("id_l"), F.col("_n").alias("_nl"), "_t"
-    )
-    pr = _prefix_tokens(sets_r, dfreq, t_num, t_den).select(
-        F.col("_id").alias("id_r"), F.col("_n").alias("_nr"), "_t"
-    )
+    pl = _prefix_tokens(sets_l, dfreq, t_num, t_den).toDF("id_l", "_nl", "_t")
+    pr = _prefix_tokens(sets_r, dfreq, t_num, t_den).toDF("id_r", "_nr", "_t")
     cand = (
         pl.join(pr, "_t")
+        # length pruning (exact integer form): J ≥ t needs
+        # min·t_den ≥ max·t_num
         .filter(
             (F.col("_nl") * t_den >= F.col("_nr") * t_num)
             & (F.col("_nr") * t_den >= F.col("_nl") * t_num)
@@ -908,30 +858,7 @@ def prefix_jaccard_join(
         .select("id_l", "id_r")
         .distinct()
     )
-    sl = sets_l.select(
-        F.col("_id").alias("id_l"),
-        F.col("_s").alias("_sl"),
-        F.col("_n").alias("_nl"),
-    )
-    sr = sets_r.select(
-        F.col("_id").alias("id_r"),
-        F.col("_s").alias("_sr"),
-        F.col("_n").alias("_nr"),
-    )
-    inter = F.size(F.array_intersect("_sl", "_sr"))
-    return (
-        cand.join(sl, "id_l")
-        .join(sr, "id_r")
-        .withColumn("n_inter", inter)
-        .withColumn("n_union", F.col("_nl") + F.col("_nr") - inter)
-        .filter(F.col("n_inter") * t_den >= F.col("n_union") * t_num)
-        .select(
-            "id_l",
-            "id_r",
-            F.col("n_inter").cast("long").alias("n_inter"),
-            F.col("n_union").cast("long").alias("n_union"),
-        )
-    )
+    return _verify_jaccard(cand, sets_l, sets_r, t_num, t_den)
 
 
 def anti_join_near_dups(
@@ -972,52 +899,17 @@ def prefix_jaccard_pairs(
     explosion AllPairs suffers is exactly what the df-ordering
     avoids); (4) verification re-reads the compact (id, set) table
     for candidate ids only. Nothing quadratic materializes unless
-    the data is genuinely all-near-duplicate."""
-    if not (0 < t_num <= t_den):
-        raise ValueError("need 0 < t_num <= t_den")
-    sets_ = _shingle_sets(df, id_col, text_col, shingle_n)
-    tok = sets_.select("_id", "_n", F.explode("_s").alias("_t"))
-    dfreq = tok.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    prefix = _prefix_tokens(sets_, dfreq, t_num, t_den)
-    a = prefix.select(
-        F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "_t"
-    )
-    b = prefix.select(
-        F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "_t"
-    )
-    cand = (
-        a.join(b, "_t")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # length pruning (exact integer form): J ≥ t needs
-        # min·t_den ≥ max·t_num
-        .filter(
-            (F.col("_na") * t_den >= F.col("_nb") * t_num)
-            & (F.col("_nb") * t_den >= F.col("_na") * t_num)
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sets_.select(
-        F.col("_id").alias("id_a"),
-        F.col("_s").alias("_sa"),
-        F.col("_n").alias("_na"),
-    )
-    sb = sets_.select(
-        F.col("_id").alias("id_b"),
-        F.col("_s").alias("_sb"),
-        F.col("_n").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
+    the data is genuinely all-near-duplicate.
+
+    This is :func:`prefix_jaccard_join` of ``df`` with itself, kept to
+    ``id_a < id_b``: df counted over ``df ∪ df`` doubles every df, so
+    the rarest-first order and the prefixes are the self-join's own,
+    and Catalyst pushes the id filter into the prefix-token join."""
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("n_inter", inter)
-        .withColumn("n_union", F.col("_na") + F.col("_nb") - inter)
-        .filter(F.col("n_inter") * t_den >= F.col("n_union") * t_num)
+        prefix_jaccard_join(df, df, id_col, text_col, shingle_n, t_num, t_den)
+        .filter(F.col("id_l") < F.col("id_r"))
         .select(
-            "id_a",
-            "id_b",
-            F.col("n_inter").cast("long").alias("n_inter"),
-            F.col("n_union").cast("long").alias("n_union"),
+            F.col("id_l").alias("id_a"), F.col("id_r").alias("id_b"),
+            "n_inter", "n_union",
         )
     )

@@ -197,8 +197,8 @@ GOPHER_DUP_NGRAM_THRESHOLDS = {
 
 def _ngrams(w: Column, n: int) -> Column:
     """Word n-gram occurrence array (NOT deduplicated — repetition
-    counting needs every occurrence; textdedup.word_shingles is the
-    deduplicated twin). Fewer than n words → empty array; the
+    counting needs every occurrence; textdedup.shingles_from_words
+    is the deduplicated twin). Fewer than n words → empty array; the
     ``when`` guard matters because ``sequence(1, size-n+1)`` would
     DESCEND for short docs and fabricate windows."""
     return F.when(
@@ -530,7 +530,8 @@ def _gopher_repetition_arrow(df: DataFrame, text_col: str) -> DataFrame:
 def doc_fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 hex of normalized text
     (the rolling-hash family's degenerate whole-doc case; windowed
-    rolling fingerprints live in textdedup.word_shingles + xxhash64)."""
+    rolling fingerprints live in textdedup.shingles_from_words +
+    xxhash64)."""
     return F.md5(norm_text(text))
 
 

@@ -44,7 +44,7 @@ from wos_crawler_spark.operators.bloom import (
     sized_sketch,
 )
 from wos_crawler_spark.operators.dedup import dedup_frontier
-from wos_crawler_spark.operators.linkgraph import opic_int
+from wos_crawler_spark.operators.linkgraph import EmptyGraphError, opic_int
 from wos_crawler_spark.operators.parse_plaintext import parse_pages
 from wos_crawler_spark.operators.politeness import schedule_wave
 from wos_crawler_spark.operators.robots import robots_filter
@@ -890,14 +890,16 @@ def _opic_rescore(
     design: a landed row whose canon differs simply keeps its
     inherited priority, mirrored exactly by the simulator twin).
     Returns the rescored frontier and the scores it reads (None while
-    there are no edges)."""
+    there are no edges: ``opic_int``'s node count is the emptiness
+    test, so no separate pass over hit log ⋈ links probes for it)."""
     e0 = hit_log.join(links, hit_log.url == links.src_url).select(
         F.col("url_canon").alias("src"), F.col("dst_url").alias("url")
     )
     edges = with_url_canon(e0).select("src", F.col("url_canon").alias("dst"))
-    if edges.isEmpty():
+    try:
+        scores = opic_int(edges, n_iter=cfg.opic_iters, scale=cfg.opic_scale)
+    except EmptyGraphError:
         return frontier, None
-    scores = opic_int(edges, n_iter=cfg.opic_iters, scale=cfg.opic_scale)
     rescored = frontier.join(
         scores, frontier.url_canon == scores.node, "left"
     ).withColumn(
