@@ -276,6 +276,20 @@ def test_crawl_resume_adopts_checkpointed_bloom_flavor(spark, tmp_path):
         )
 
 
+def test_seen_sketch_cache_holds_one_sketch():
+    """The executor-side sketch cache keeps only the latest token's
+    sketch: a new wave's sketch evicts the previous one, and a repeat
+    lookup of the current token does not reload."""
+    from wos_crawler_spark.operators import dedup
+
+    dedup._BLOOM_CACHE.clear()
+    assert dedup._cached_sketch(1, lambda: "wave-1") == "wave-1"
+    assert dedup._cached_sketch(1, lambda: pytest.fail("reloaded")) == "wave-1"
+    assert dedup._cached_sketch(2, lambda: "wave-2") == "wave-2"
+    assert dedup._BLOOM_CACHE == {2: "wave-2"}
+    dedup._BLOOM_CACHE.clear()
+
+
 def test_false_positive_rescued_by_exact_antijoin(spark):
     """A Bloom false positive must still survive dedup thanks to the
     exact anti-join (correctness never depends on the Bloom)."""

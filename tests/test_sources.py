@@ -40,6 +40,41 @@ def test_export_dir_scan_feeds_parser(spark, tmp_path):
     assert uids == expect and len(uids) == n
 
 
+BIB = """@article{ ISI:000111111100001,
+Author = {Leung, Tom},
+Title = {{First entry}},
+Year = {{2018}},
+Unique-ID = {{ISI:000111111100001}},
+}
+
+@article{ ISI:000111111100002,
+Author = {Solo, Han},
+Title = {{Second entry}},
+Year = {{2019}},
+Unique-ID = {{ISI:000111111100002}},
+}
+"""
+
+
+def test_bibtex_dir_scan_feeds_bib_parser(spark, tmp_path):
+    """read_bibtex_dir returns the pages shape, so parse_bib_pages runs
+    on it directly and finds the same records as parse_bib_text."""
+    from wos_crawler_spark.operators.parse_bibtex import (
+        parse_bib_pages,
+        parse_bib_text,
+    )
+    from wos_crawler_spark.sources import read_bibtex_dir
+
+    exp = tmp_path / "bib"
+    exp.mkdir()
+    (exp / "savedrecs.bib").write_text(BIB, encoding="utf-8")
+    pages = read_bibtex_dir(spark, str(exp))
+    assert pages.columns == ["url", "warc_ts", "html", "text", "lang"]
+    uids = sorted(r["unique_id"] for r in parse_bib_pages(pages).collect())
+    assert uids == sorted(r["unique_id"] for r in parse_bib_text(BIB))
+    assert len(uids) == 2
+
+
 def test_seed_file_scan(spark, tmp_path):
     f = tmp_path / "seeds.txt"
     f.write_text(

@@ -253,3 +253,41 @@ def test_read_warc_feeds_html_pipeline(spark, tmp_path):
         "https://a.com/next", "https://e.org/p"
     }
     assert pages.first()["status"] == 200
+
+
+def test_one_walker_splits_mixed_blob_and_resyncs_on_bad_text():
+    """WET and WARC share one framing walk: over a blob mixing both
+    record types, parse_wet_bytes yields exactly the conversions and
+    parse_warc_bytes exactly the responses. A conversion whose payload
+    is not UTF-8 is not emitted; the walk resyncs past its magic, so
+    the next well-formed record still parses."""
+    from wos_crawler_spark.sources.wet import (
+        _MAGIC,
+        parse_warc_bytes,
+        warc_response_record_bytes,
+    )
+
+    bad = b"caf\xe9 latin-1"
+    not_utf8 = (
+        _MAGIC
+        + b"WARC-Type: conversion\r\nWARC-Target-URI: https://bad\r\n"
+        + f"Content-Length: {len(bad)}\r\n\r\n".encode()
+        + bad
+        + b"\r\n\r\n"
+    )
+    blob = wet_file_bytes([("https://c/1", D, "one")]) + b"".join(
+        [
+            warc_response_record_bytes("https://r/1", D, 200, "text/html", b"<p>1"),
+            not_utf8,
+            wet_record_bytes("https://c/2", D, "two"),
+            warc_response_record_bytes("https://r/2", D, 404, "text/html", b""),
+        ]
+    )
+    assert list(parse_wet_bytes(blob)) == [
+        ("https://c/1", D, "one", 3),
+        ("https://c/2", D, "two", 3),
+    ]
+    assert [(u, s, b) for u, _, s, _, b, _ in parse_warc_bytes(blob)] == [
+        ("https://r/1", 200, b"<p>1"),
+        ("https://r/2", 404, b""),
+    ]

@@ -65,12 +65,24 @@ def dedup_intra_wave(candidates: DataFrame, hash_col: str = "url_hash") -> DataF
     )
 
 
-#: Executor-side cache of deserialized Bloom filters keyed by
-#: broadcast id: from_bytes copies the full bit array (MBs at real
-#: capacities), and the probe UDF runs once per Arrow batch — without
-#: the cache a 12 MB filter is re-copied hundreds of times per wave.
+#: Executor-side cache of the deserialized seen sketch, keyed by the
+#: token of the ``mark_maybe_seen`` call that shipped it: from_bytes
+#: copies the full bit array (about 1.2 GB for 10^9 keys at 1% fpp),
+#: and the probe UDF runs once per Arrow batch — without the cache the
+#: sketch is re-copied hundreds of times per wave. It holds ONE entry:
+#: a new token evicts the previous waves' sketches before loading.
 _BLOOM_CACHE: dict[int, object] = {}
 _CACHE_TOKEN = 0
+
+
+def _cached_sketch(token: int, load):
+    """The sketch for ``token``: cached, or ``load()``-ed after every
+    other token's sketch is dropped."""
+    bf = _BLOOM_CACHE.get(token)
+    if bf is None:
+        _BLOOM_CACHE.clear()
+        bf = _BLOOM_CACHE[token] = load()
+    return bf
 
 
 def mark_maybe_seen(df: DataFrame, bloom: SeenSketch, hash_col: str = "url_hash") -> DataFrame:
@@ -85,12 +97,7 @@ def mark_maybe_seen(df: DataFrame, bloom: SeenSketch, hash_col: str = "url_hash"
 
     @F.pandas_udf("boolean")
     def _maybe(h: pd.Series) -> pd.Series:
-        bf = _BLOOM_CACHE.get(token)
-        if bf is None:
-            if len(_BLOOM_CACHE) > 8:  # previous waves' filters
-                _BLOOM_CACHE.clear()
-            bf = bloom_from_bytes(b.value)
-            _BLOOM_CACHE[token] = bf
+        bf = _cached_sketch(token, lambda: bloom_from_bytes(b.value))
         return pd.Series(bf.might_contain(h.to_numpy()))
 
     return df.withColumn("maybe_seen", _maybe(F.col(hash_col)))

@@ -7,8 +7,9 @@ WoS export field names (``unique-id``, ``times-cited``, and-separated
 ``author``, newline-separated ``cited-references``, …) onto the same ORM
 models as the plaintext parser.
 
-Spark-first: a second ``mapInPandas`` UDF with the SAME output schema as
-the plaintext parser (:data:`PARSED_DOC_SCHEMA`), so downstream
+Spark-first: the shared export parse operator (one ``mapInPandas``)
+with the SAME output schema as the plaintext parser
+(:data:`PARSED_DOC_SCHEMA`), so downstream
 normalization is parser-agnostic. The entry tokenizer is a small
 balanced-brace scanner (bibtexparser is not in the image; the grammar
 subset WoS emits is fixed), and the LaTeX de-escape table is explicit
@@ -18,15 +19,13 @@ data — the byte contract for unicode fixtures.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wos_crawler_spark.operators.parse_plaintext import (
-    PARSED_DOC_SCHEMA,
-    _OUT_COLS,
     _assemble_record,
+    _parse_export_pages,
+    _per_file,
 )
 
 #: LaTeX → unicode de-escape table (applied longest-first). Pinned by
@@ -252,28 +251,12 @@ def _bib_to_tag_fields(entry: dict) -> dict:
 def parse_bib_text(text: str, url: str | None = None) -> list[dict]:
     """Pure-Python entry: one .bib payload → parsed record dicts with
     the shared PARSED_DOC_SCHEMA keys."""
-    out = []
-    for entry in parse_bibtex_entries(text):
-        fields = _bib_to_tag_fields(entry)  # tag → list of items
-        rec = _assemble_record(fields)
-        rec["url"] = url
-        out.append(rec)
-    return out
+    return [
+        _assemble_record(_bib_to_tag_fields(entry), url)
+        for entry in parse_bibtex_entries(text)
+    ]
 
 
 def parse_bib_pages(pages: DataFrame, text_col: str = "text", url_col: str = "url") -> DataFrame:
     """Spark operator: pages of .bib payloads → parsed documents."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                recs.extend(parse_bib_text(text or "", url))
-            if recs:
-                out = pd.DataFrame(recs)
-                for col in _OUT_COLS:
-                    if col not in out.columns:
-                        out[col] = None
-                yield out[_OUT_COLS]
-
-    return pages.select(url_col, text_col).mapInPandas(_parse, PARSED_DOC_SCHEMA)
+    return _parse_export_pages(pages, text_col, url_col, _per_file(parse_bib_text))

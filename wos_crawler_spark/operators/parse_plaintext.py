@@ -28,6 +28,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -148,8 +149,6 @@ def _segment_fields(texts: pd.Series) -> pd.DataFrame:
     line order and need no groupby (pandas ``groupby().agg(list)``
     walked 700k+ groups in pure Python and was ~85% of parse time).
     """
-    import numpy as np
-
     file_ids: list = []
     lines: list[str] = []
     for idx, t in zip(texts.index, texts.tolist()):
@@ -407,8 +406,9 @@ def serialize_extracted_text(fields: dict) -> str:
     return "\n".join(lines)
 
 
-def _assemble_record(fields: dict) -> dict:
-    """fields: tag → list of raw items. Scalars get space-joined here."""
+def _assemble_record(fields: dict, url: str | None) -> dict:
+    """fields: tag → list of raw items. Scalars get space-joined here;
+    the record is keyed by its source ``url``."""
     f: dict = {}
     for tag, items in fields.items():
         if tag in LIST_TAGS:
@@ -431,6 +431,7 @@ def _assemble_record(fields: dict) -> dict:
     _u2 = _parse_int(g("U2"))
     usage = _u2 if _u2 is not None else _parse_int(g("U1"))
     rec = {
+        "url": url,
         "unique_id": re.sub(r"^WOS:", "", ut) if ut else None,  # P11
         "title": g("TI"),
         "abstract": g("AB"),
@@ -469,19 +470,19 @@ def _assemble_record(fields: dict) -> dict:
 def parse_export_text(text: str, url: str | None = None) -> list[dict]:
     """Parse one export payload (possibly multi-record) → record dicts.
     Pure-Python entry for tests and the simulator oracle."""
-    fields_df = _segment_fields(pd.Series([text]))
-    return _records_from_fields(fields_df, {0: url})
+    return _export_records(pd.Series([text]), [url])
 
 
-def _records_from_fields(fields_df: pd.DataFrame, urls: dict) -> list[dict]:
-    out = []
+def _export_records(texts: pd.Series, urls) -> list[dict]:
+    """Records of a batch of payloads (``texts`` range-indexed,
+    ``urls[i]`` the url of ``texts[i]``): the vectorized line pass,
+    then per-record assembly."""
+    fields_df = _segment_fields(texts)
     if fields_df.empty:
-        return out
+        return []
     # rows arrive in line order from _segment_fields, so (file, record)
     # groups are contiguous runs and file/record keys are already
     # sorted — no pandas groupby iteration needed
-    import numpy as np
-
     fi = fields_df["file_idx"].to_numpy()
     ri = fields_df["record_idx"].to_numpy()
     tags = fields_df["tag"].to_numpy(dtype=object)
@@ -490,14 +491,39 @@ def _records_from_fields(fields_df: pd.DataFrame, urls: dict) -> list[dict]:
     new[1:] = (fi[1:] != fi[:-1]) | (ri[1:] != ri[:-1])
     starts = np.flatnonzero(new)
     ends = np.append(starts[1:], len(fi))
-    for a, b in zip(starts, ends):
-        rec = _assemble_record(dict(zip(tags[a:b], items[a:b])))
-        rec["url"] = urls.get(fi[a])
-        out.append(rec)
-    return out
+    return [
+        _assemble_record(dict(zip(tags[a:b], items[a:b])), urls[fi[a]])
+        for a, b in zip(starts, ends)
+    ]
 
 
 # ------------------------------------------------------- Spark operator
+
+
+def _parse_export_pages(
+    pages: DataFrame, text_col: str, url_col: str, records
+) -> DataFrame:
+    """The one parse operator of every export flavor: ``pages`` pruned
+    to ``(url_col, text_col)``, one ``mapInPandas`` whose batches go
+    through ``records(texts, urls)`` → PARSED_DOC_SCHEMA rows."""
+
+    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            recs = records(
+                pdf[text_col].reset_index(drop=True), pdf[url_col].tolist()
+            )
+            if recs:
+                yield pd.DataFrame(recs, columns=_OUT_COLS)
+
+    return pages.select(url_col, text_col).mapInPandas(_parse, PARSED_DOC_SCHEMA)
+
+
+def _per_file(parse_text):
+    """``records(texts, urls)`` for a flavor parsed one whole file at a
+    time by ``parse_text(text, url)``; a NULL text parses as ``""``."""
+    return lambda texts, urls: [
+        rec for text, url in zip(texts, urls) for rec in parse_text(text or "", url)
+    ]
 
 
 def parse_pages(pages: DataFrame, text_col: str = "text", url_col: str = "url") -> DataFrame:
@@ -506,21 +532,4 @@ def parse_pages(pages: DataFrame, text_col: str = "text", url_col: str = "url") 
     mapInPandas keeps the whole parse Arrow-batched; upstream column
     pruning means only (url, text) are scanned (verify: ReadSchema in
     ``.explain``)."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            texts = pdf[text_col].reset_index(drop=True)
-            urls = dict(enumerate(pdf[url_col].reset_index(drop=True)))
-            fields_df = _segment_fields(texts)
-            recs = _records_from_fields(fields_df, urls)
-            if not recs:
-                continue
-            out = pd.DataFrame(recs)
-            for c in _OUT_COLS:
-                if c not in out.columns:
-                    out[c] = None
-            yield out[_OUT_COLS]
-
-    return pages.select(url_col, text_col).mapInPandas(_parse, PARSED_DOC_SCHEMA)
+    return _parse_export_pages(pages, text_col, url_col, _export_records)

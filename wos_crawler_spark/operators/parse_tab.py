@@ -13,24 +13,21 @@ Spark-first: the SAME output schema as the plaintext parser
 downstream normalization and the byte-pinned ``extracted_text``
 serialization are parser-agnostic — a record exported as plaintext and
 as tab yields IDENTICAL rows including extracted_text bytes (pinned in
-tests/test_parser.py). The line pass is vectorized pandas ``.str``
-ops; per-record cell assembly runs over already-reduced data like the
-other two parsers.
+tests/test_parser.py). Parsing is a per-file Python pass (split lines,
+then cells per record), run by the shared export parse operator like
+the XML and BibTeX flavors.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wos_crawler_spark.operators.parse_plaintext import (
     LIST_TAGS,
-    PARSED_DOC_SCHEMA,
     SKIP_TAGS,
-    _OUT_COLS,
     _assemble_record,
+    _parse_export_pages,
+    _per_file,
 )
 
 
@@ -53,9 +50,7 @@ def parse_tab_text(text: str, url: str | None = None) -> list[dict]:
                 fields[tag] = [s.strip() for s in cell.split("; ") if s.strip()]
             else:
                 fields[tag] = [cell]
-        rec = _assemble_record(fields)
-        rec["url"] = url
-        out.append(rec)
+        out.append(_assemble_record(fields, url))
     return out
 
 
@@ -65,20 +60,4 @@ def parse_tab_pages(
     """``pages(url, text, ...)`` where text is a whole tab-export file
     → one parsed-document row per record (same plan shape as
     parse_pages: one mapInPandas, column-pruned input)."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            recs: list[dict] = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                recs.extend(parse_tab_text(text or "", url))
-            if not recs:
-                continue
-            out = pd.DataFrame(recs)
-            for c in _OUT_COLS:
-                if c not in out.columns:
-                    out[c] = None
-            yield out[_OUT_COLS]
-
-    return pages.select(url_col, text_col).mapInPandas(_parse, PARSED_DOC_SCHEMA)
+    return _parse_export_pages(pages, text_col, url_col, _per_file(parse_tab_text))

@@ -8,24 +8,23 @@ lines exactly, so the shared ``_assemble_record`` yields IDENTICAL
 normalized rows (including ``extracted_text`` bytes) for a record
 exported as XML vs plaintext vs tab (pinned in tests/test_parser.py).
 
-Spark-first: one ``mapInPandas`` over whole-file rows, stdlib
-``xml.etree`` (C-accelerated expat) per file — the per-file parse is
-the reduced unit, same shape as the other three parsers.
+Spark-first: the shared export parse operator (one ``mapInPandas``)
+over whole-file rows, stdlib ``xml.etree`` (C-accelerated expat) per
+file — the per-file parse is the reduced unit, same shape as the
+other three parsers.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from xml.etree import ElementTree
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wos_crawler_spark.operators.parse_plaintext import (
-    PARSED_DOC_SCHEMA,
     SKIP_TAGS,
-    _OUT_COLS,
     _assemble_record,
+    _parse_export_pages,
+    _per_file,
 )
 
 
@@ -47,9 +46,7 @@ def parse_xml_text(text: str, url: str | None = None) -> list[dict]:
             items = [it.text or "" for it in f_el.iter("item")]
             if items:
                 fields[tag] = items
-        rec = _assemble_record(fields)
-        rec["url"] = url
-        out.append(rec)
+        out.append(_assemble_record(fields, url))
     return out
 
 
@@ -58,21 +55,4 @@ def parse_xml_pages(
 ) -> DataFrame:
     """``pages(url, text, ...)`` where text is a whole XML export file
     → one parsed-document row per ``<REC>``."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            recs: list[dict] = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                if text:
-                    recs.extend(parse_xml_text(text, url))
-            if not recs:
-                continue
-            out = pd.DataFrame(recs)
-            for c in _OUT_COLS:
-                if c not in out.columns:
-                    out[c] = None
-            yield out[_OUT_COLS]
-
-    return pages.select(url_col, text_col).mapInPandas(_parse, PARSED_DOC_SCHEMA)
+    return _parse_export_pages(pages, text_col, url_col, _per_file(parse_xml_text))

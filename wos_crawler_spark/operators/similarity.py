@@ -410,7 +410,6 @@ def score_candidates(
     vec_col: str = "embedding",
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
-    emit_starved: bool = True,
     use_arrow: bool = True,
 ) -> DataFrame:
     """Shared ANN re-rank stage: exact cosine over (q_id, vec_id)
@@ -427,8 +426,7 @@ def score_candidates(
     rank=NULL)`` row (anti-join of the query set against the candidate
     q_ids — a broadcast-sized side), so callers never have to re-derive
     total starvation themselves; ``n_candidates`` covers the
-    under-filled (0 < n < k) case. ``emit_starved=False`` restores the
-    candidates-only output."""
+    under-filled (0 < n < k) case."""
     scorer = cosine_arrow if use_arrow else cosine
     scored = (
         cand_ids.join(corpus.select(id_col, vec_col), id_col)
@@ -446,8 +444,6 @@ def score_candidates(
         .withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
     )
-    if not emit_starved:
-        return ranked
     starved = (
         queries.select(q_id_col)
         .join(

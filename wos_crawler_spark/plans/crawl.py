@@ -436,6 +436,22 @@ def _bucketed(df: DataFrame, parts: int, key: str) -> DataFrame:
     return df.repartition(parts, key).sortWithinPartitions(key)
 
 
+def project_fetch_side(pages: DataFrame, with_text: bool) -> DataFrame:
+    """The fetch join's pages-side projection, shared by every layout
+    of that side: ``url, [text,] lang, warc_ts`` plus the ``_page_hit``
+    marker. ``with_text=False`` (schedule-throughput runs, parse off)
+    drops the heavy payload column — the join only has to prove
+    hit/miss, so shuffling page bytes would be pure waste."""
+    cols = ["url", "text", "lang", "warc_ts"] if with_text else [
+        "url", "lang", "warc_ts"
+    ]
+    # `_page_hit` is the hit/miss probe for the left fetch join: always
+    # non-null for an existing page. Probing a data column instead
+    # (text/warc_ts) miscounts legitimately-null values as misses and
+    # re-queues existing pages as retries every wave.
+    return pages.select(*cols, F.lit(True).alias("_page_hit"))
+
+
 def prepare_fetch_side(
     pages: DataFrame, parts: int, with_text: bool,
     storage_level: str | None = None,
@@ -449,18 +465,10 @@ def prepare_fetch_side(
     This is the sandbox stand-in for the production layout: an Iceberg
     table ``PARTITIONED BY (bucket(256, url))`` gives the same
     zero-shuffle property via storage-partitioned joins, with no cache
-    needed. ``with_text=False`` (schedule-throughput runs, parse off)
-    drops the heavy payload column before caching — the join only has
-    to prove hit/miss, so shuffling page bytes would be pure waste."""
-    cols = ["url", "text", "lang", "warc_ts"] if with_text else [
-        "url", "lang", "warc_ts"
-    ]
-    # `_page_hit` is the hit/miss probe for the left fetch join: always
-    # non-null for an existing page. Probing a data column instead
-    # (text/warc_ts) miscounts legitimately-null values as misses and
-    # re-queues existing pages as retries every wave.
+    needed. The columns are :func:`project_fetch_side`'s, projected
+    before caching."""
     return _bucketed(
-        pages.select(*cols, F.lit(True).alias("_page_hit")), parts, "url"
+        project_fetch_side(pages, with_text), parts, "url"
     ).persist(_storage(storage_level))
 
 

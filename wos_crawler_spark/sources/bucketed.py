@@ -47,7 +47,8 @@ Operational notes encoded here rather than left to callers:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from wos_crawler_spark.plans.crawl import project_fetch_side
 
 __all__ = [
     "write_bucketed",
@@ -105,15 +106,10 @@ def fetch_side_from_table(
     cache — the scan itself carries ``HashPartitioning(url)``. Pass
     the result as ``run_crawl(pages_fetch=...)``.
 
-    Same projection contract as prepare_fetch_side: ``_page_hit`` is
-    the always-non-null hit/miss probe for the left join (a data
-    column would miscount legitimately-null values as misses), and
-    ``with_text=False`` prunes the heavy payload column at the scan
-    (schedule-throughput runs never shuffle page bytes)."""
-    cols = ["url", "text", "lang", "warc_ts"] if with_text else [
-        "url", "lang", "warc_ts"
-    ]
-    return spark.table(table).select(*cols, F.lit(True).alias("_page_hit"))
+    The columns are ``plans.crawl.project_fetch_side``'s, the same
+    projection prepare_fetch_side caches; ``with_text=False`` prunes
+    the heavy payload column at the scan."""
+    return project_fetch_side(spark.table(table), with_text)
 
 
 def links_side_from_table(spark: SparkSession, table: str) -> DataFrame:

@@ -4,10 +4,13 @@ Reference behaviors re-expressed:
 
 - S7 export-dir scan: the reference globs ``{output}/**/*.txt`` and
   feeds each file to ``ref:wos_crawler/parsers/plaintext/
-  plaintext_parser.py::parse`` †. Here: ``spark.read.text(...,
-  wholetext=True)`` + ``input_file_name()`` — one row per export file,
-  shaped like the ``pages`` table so the same ``parse_pages`` operator
-  consumes crawl output and on-disk exports identically.
+  plaintext_parser.py::parse`` †. Here one shared reader,
+  ``_read_export_files`` (``spark.read.text(..., wholetext=True)`` +
+  ``input_file_name()``), gives one row per export file, shaped like
+  the ``pages`` table, for every flavor: ``read_export_dir`` (.txt),
+  ``read_tab_dir`` (.tab.txt) and ``read_bibtex_dir`` (.bib) differ
+  only in the glob, so the parse operators consume crawl output and
+  on-disk exports identically.
 - S1 seed scan: one WoS advanced query per line →
   ``seeds(query_id, query, term, priority)``.
 - pages reader: parquet in the sandbox; the production table is
@@ -22,12 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_export_dir(spark: SparkSession, path: str) -> DataFrame:
-    """S7: directory of WoS field-tagged ``.txt`` export files → a
-    pages-shaped DataFrame (url = file URI, text = whole file). Each
-    file holds ≤500 records (the reference's batch size); wholetext
+def _read_export_files(spark: SparkSession, pattern: str) -> DataFrame:
+    """The one export-file reader: every file matching ``pattern`` → a
+    pages-shaped row (url = file URI, text = whole file). wholetext
     keeps the record grammar intact for the parse UDF."""
-    df = spark.read.text(f"{path}/*.txt", wholetext=True)
+    df = spark.read.text(pattern, wholetext=True)
     return df.select(
         F.input_file_name().alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
@@ -35,29 +37,26 @@ def read_export_dir(spark: SparkSession, path: str) -> DataFrame:
         F.col("value").alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
+
+
+def read_export_dir(spark: SparkSession, path: str) -> DataFrame:
+    """S7: directory of WoS field-tagged ``.txt`` export files → a
+    pages-shaped DataFrame for operators/parse_plaintext.parse_pages.
+    Each file holds ≤500 records (the reference's batch size)."""
+    return _read_export_files(spark, f"{path}/*.txt")
 
 
 def read_tab_dir(spark: SparkSession, path: str) -> DataFrame:
     """S7 (tab-delimited flavor): ``.tab.txt`` export files (header row
     of field tags + one row per record), one pages-shaped row per file
     for operators/parse_tab.parse_tab_pages."""
-    df = spark.read.text(f"{path}/*.tab.txt", wholetext=True)
-    return df.select(
-        F.input_file_name().alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("value").alias("text"),
-        F.lit(None).cast("string").alias("lang"),
-    )
+    return _read_export_files(spark, f"{path}/*.tab.txt")
 
 
 def read_bibtex_dir(spark: SparkSession, path: str) -> DataFrame:
-    """S7 (BibTeX flavor): ``.bib`` export files, one row per file."""
-    df = spark.read.text(f"{path}/*.bib", wholetext=True)
-    return df.select(
-        F.input_file_name().alias("url"),
-        F.col("value").alias("bibtex"),
-    )
+    """S7 (BibTeX flavor): ``.bib`` export files, one pages-shaped row
+    per file for operators/parse_bibtex.parse_bib_pages."""
+    return _read_export_files(spark, f"{path}/*.bib")
 
 
 def read_seeds(spark: SparkSession, path: str, priority: int = 100) -> DataFrame:

@@ -25,6 +25,13 @@ degrade gracefully: the parser resyncs to the next record magic and
 keeps going (one corrupt record cannot kill a 400 MB file's task,
 mirroring parse_xml's per-file try/except contract).
 
+One framing, two record types: a single walker (``_walk``) frames
+every record by Content-Length for both WET ``conversion`` and WARC
+``response`` records; the two formats differ only in the payload
+reader each passes it. Likewise one record builder, one file builder,
+one blob→rows ``mapInPandas``, one ``binaryFile`` reader and one
+url-sorted serializer serve both formats.
+
 Determinism: serialization sorts records by url within each group;
 parsing preserves file order; text survives byte-identical (the
 Content-Length framing is computed on UTF-8 octets, not characters).
@@ -45,52 +52,54 @@ _HDR_END = b"\r\n\r\n"
 # ------------------------------------------------------------ builders
 
 
+def _record(warc_type: str, fields: Iterable[tuple[str, object]], payload: bytes) -> bytes:
+    """One ISO 28500 record: ``WARC-Type``, then ``fields`` in order,
+    then ``Content-Length`` (the payload's octet count) last."""
+    head = "".join(
+        f"{k}: {v}\r\n"
+        for k, v in (("WARC-Type", warc_type), *fields, ("Content-Length", len(payload)))
+    ).encode("utf-8")
+    return _MAGIC + head + b"\r\n" + payload + b"\r\n\r\n"
+
+
+def _file_bytes(fmt: str, records: Iterable[bytes]) -> bytes:
+    """A whole file: the leading ``warcinfo`` record naming ``fmt``,
+    then the already-built records."""
+    info = _record(
+        "warcinfo",
+        (("Content-Type", "application/warc-fields"),),
+        f"software: wos_crawler_spark\r\nformat: {fmt}\r\n".encode("utf-8"),
+    )
+    return info + b"".join(records)
+
+
 def wet_record_bytes(url: str, date: str, text: str) -> bytes:
     """One ``conversion`` record. ``date`` is the WARC-Date string
     (``yyyy-MM-ddTHH:mm:ssZ``); ``text`` is framed by its UTF-8 octet
     length."""
-    body = (text or "").encode("utf-8")
-    head = (
-        f"WARC-Type: conversion\r\n"
-        f"WARC-Target-URI: {url}\r\n"
-        f"WARC-Date: {date}\r\n"
-        f"Content-Type: text/plain\r\n"
-        f"Content-Length: {len(body)}\r\n"
-    ).encode("utf-8")
-    return _MAGIC + head + b"\r\n" + body + b"\r\n\r\n"
+    return _record(
+        "conversion",
+        (("WARC-Target-URI", url), ("WARC-Date", date), ("Content-Type", "text/plain")),
+        (text or "").encode("utf-8"),
+    )
 
 
 def wet_file_bytes(records: Iterable[tuple[str, str, str]]) -> bytes:
     """A whole WET file: leading ``warcinfo`` record, then one
     ``conversion`` record per ``(url, date, text)``."""
-    info_body = b"software: wos_crawler_spark\r\nformat: WET\r\n"
-    info = (
-        _MAGIC
-        + (
-            f"WARC-Type: warcinfo\r\n"
-            f"Content-Type: application/warc-fields\r\n"
-            f"Content-Length: {len(info_body)}\r\n"
-        ).encode("utf-8")
-        + b"\r\n"
-        + info_body
-        + b"\r\n\r\n"
-    )
-    return info + b"".join(
-        wet_record_bytes(u, d, t) for (u, d, t) in records
-    )
+    return _file_bytes("WET", (wet_record_bytes(u, d, t) for (u, d, t) in records))
 
 
 # -------------------------------------------------------------- parser
 
 
-def parse_wet_bytes(
-    blob: bytes,
-) -> Iterator[tuple[str, str, str, int]]:
-    """Walk one WET blob by Content-Length, yielding
-    ``(url, warc_date, text, n_bytes)`` for every well-formed
-    ``conversion`` record. Malformed records (missing/invalid
-    Content-Length, truncated payload, undecodable header) resync to
-    the next record magic instead of raising."""
+def _walk(blob: bytes, warc_type: str, read) -> Iterator:
+    """Walk one blob by Content-Length, yielding ``read(headers,
+    payload)`` for every well-framed record of ``warc_type``
+    (``headers`` keyed by lower-cased name). Malformed records —
+    undecodable header, missing/invalid Content-Length, truncated
+    payload, or a payload ``read`` rejects with ``ValueError`` — resync
+    to the next record magic after this one instead of raising."""
     pos = 0
     n = len(blob)
     while True:
@@ -119,19 +128,35 @@ def parse_wet_bytes(
         if body_end > n:
             pos = hdr_start  # truncated payload — resync
             continue
-        if headers.get("warc-type") == "conversion":
+        if headers.get("warc-type") == warc_type:
             try:
-                text = blob[body_start:body_end].decode("utf-8")
-            except UnicodeDecodeError:
+                rec = read(headers, blob[body_start:body_end])
+            except ValueError:  # rejected payload — resync
                 pos = hdr_start
                 continue
-            yield (
-                headers.get("warc-target-uri", ""),
-                headers.get("warc-date", ""),
-                text,
-                length,
-            )
+            yield rec
         pos = body_end
+
+
+def _read_conversion(headers: dict, payload: bytes) -> tuple[str, str, str, int]:
+    """A non-UTF-8 payload raises UnicodeDecodeError: ``_walk`` resyncs."""
+    return (
+        headers.get("warc-target-uri", ""),
+        headers.get("warc-date", ""),
+        payload.decode("utf-8"),
+        len(payload),
+    )
+
+
+def parse_wet_bytes(
+    blob: bytes,
+) -> Iterator[tuple[str, str, str, int]]:
+    """Walk one WET blob by Content-Length, yielding
+    ``(url, warc_date, text, n_bytes)`` for every well-formed
+    ``conversion`` record. Malformed records (missing/invalid
+    Content-Length, truncated payload, undecodable header or text)
+    resync to the next record magic instead of raising."""
+    return _walk(blob, "conversion", _read_conversion)
 
 
 # ---------------------------------------------------- DataFrame plumbing
@@ -139,31 +164,23 @@ def parse_wet_bytes(
 _PARSED_SCHEMA = "url string, warc_date string, text string, n_bytes long"
 
 
-def parse_wet(df: DataFrame, bytes_col: str = "content") -> DataFrame:
-    """Parse a binary WET-blob column into records — one Arrow pass,
-    zero shuffles; each input row (file) fans out to its records."""
+def _parse_blobs(df: DataFrame, bytes_col: str, parse, schema: str) -> DataFrame:
+    """Binary blob column → one row per record ``parse(blob)`` yields,
+    as ``schema``; one Arrow pass, zero shuffles, NULL blobs skipped."""
+    names = [f.split()[0] for f in schema.split(",")]
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, dates, texts, sizes = [], [], [], []
-            for blob in pdf[bytes_col]:
-                if blob is None:
-                    continue
-                for u, d, t, nb in parse_wet_bytes(bytes(blob)):
-                    urls.append(u)
-                    dates.append(d)
-                    texts.append(t)
-                    sizes.append(nb)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_date": dates,
-                    "text": texts,
-                    "n_bytes": sizes,
-                }
-            )
+            blobs = (bytes(b) for b in pdf[bytes_col] if b is not None)
+            yield pd.DataFrame([r for b in blobs for r in parse(b)], columns=names)
 
-    return df.mapInPandas(_parse, _PARSED_SCHEMA)
+    return df.mapInPandas(_parse, schema)
+
+
+def parse_wet(df: DataFrame, bytes_col: str = "content") -> DataFrame:
+    """Parse a binary WET-blob column into records — one Arrow pass,
+    zero shuffles; each input row (file) fans out to its records."""
+    return _parse_blobs(df, bytes_col, parse_wet_bytes, _PARSED_SCHEMA)
 
 
 def with_warc_ts(parsed: DataFrame) -> DataFrame:
@@ -177,13 +194,34 @@ def with_warc_ts(parsed: DataFrame) -> DataFrame:
     )
 
 
+def _read_dir(spark: SparkSession, path: str, parse) -> DataFrame:
+    """Directory of blob files → ``parse``'s rows with ``warc_date``
+    replaced by ``warc_ts``; only the blob column is read."""
+    parsed = parse(spark.read.format("binaryFile").load(path).select("content"))
+    return with_warc_ts(parsed).select("url", "warc_ts", *parsed.columns[2:])
+
+
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
     """WET directory → page table ``(url, warc_ts, text, n_bytes)``.
     One task per file (binaryFile source; files ARE the parallelism
     unit over a crawl dump), column-pruned to the blob."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-    return with_warc_ts(parse_wet(files)).select(
-        "url", "warc_ts", "text", "n_bytes"
+    return _read_dir(spark, path, parse_wet)
+
+
+def _serialize(
+    df: DataFrame, group_col: str, url_col: str, out_col: str, build
+) -> DataFrame:
+    """One blob ``build(pdf)`` per ``group_col`` value — ``(group,
+    out_col binary)``; records sort by url within the group first so
+    the blob is deterministic regardless of upstream partitioning."""
+
+    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(url_col, kind="mergesort")
+        return pd.DataFrame({group_col: [key[0]], out_col: [build(pdf)]})
+
+    gtype = df.schema[group_col].dataType.simpleString()
+    return df.groupBy(group_col).applyInPandas(
+        _build, f"{group_col} {gtype}, {out_col} binary"
     )
 
 
@@ -198,20 +236,10 @@ def serialize_wet(
     ``group_col`` value — ``(group, wet binary)``. Records sort by
     url within the group so the blob is deterministic regardless of
     upstream partitioning."""
+    def build(pdf: pd.DataFrame) -> bytes:
+        return wet_file_bytes(zip(pdf[url_col], pdf[date_col], pdf[text_col].fillna("")))
 
-    gname = group_col
-
-    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(url_col, kind="mergesort")
-        blob = wet_file_bytes(
-            zip(pdf[url_col], pdf[date_col], pdf[text_col].fillna(""))
-        )
-        return pd.DataFrame({gname: [key[0]], "wet": [blob]})
-
-    gtype = df.schema[group_col].dataType.simpleString()
-    return df.groupBy(group_col).applyInPandas(
-        _build, f"{gname} {gtype}, wet binary"
-    )
+    return _serialize(df, group_col, url_col, "wet", build)
 
 
 # ------------------------------------------- WARC response records
@@ -238,15 +266,15 @@ def warc_response_record_bytes(
         f"Content-Type: {ctype}\r\n"
         f"Content-Length: {len(body)}\r\n"
     ).encode("utf-8")
-    http = http_head + b"\r\n" + body
-    head = (
-        f"WARC-Type: response\r\n"
-        f"WARC-Target-URI: {url}\r\n"
-        f"WARC-Date: {date}\r\n"
-        f"Content-Type: application/http;msgtype=response\r\n"
-        f"Content-Length: {len(http)}\r\n"
-    ).encode("utf-8")
-    return _MAGIC + head + b"\r\n" + http + b"\r\n\r\n"
+    return _record(
+        "response",
+        (
+            ("WARC-Target-URI", url),
+            ("WARC-Date", date),
+            ("Content-Type", "application/http;msgtype=response"),
+        ),
+        http_head + b"\r\n" + body,
+    )
 
 
 def warc_file_bytes(
@@ -254,21 +282,40 @@ def warc_file_bytes(
 ) -> bytes:
     """A whole WARC file: warcinfo, then one ``response`` record per
     ``(url, date, status, content_type, body_bytes)``."""
-    info_body = b"software: wos_crawler_spark\r\nformat: WARC\r\n"
-    info = (
-        _MAGIC
-        + (
-            f"WARC-Type: warcinfo\r\n"
-            f"Content-Type: application/warc-fields\r\n"
-            f"Content-Length: {len(info_body)}\r\n"
-        ).encode("utf-8")
-        + b"\r\n"
-        + info_body
-        + b"\r\n\r\n"
+    return _file_bytes(
+        "WARC",
+        (warc_response_record_bytes(u, d, s, c, b) for (u, d, s, c, b) in records),
     )
-    return info + b"".join(
-        warc_response_record_bytes(u, d, s, c, b)
-        for (u, d, s, c, b) in records
+
+
+def _read_response(headers: dict, payload: bytes) -> tuple:
+    """Lenient HTTP envelope parse: no header terminator or an
+    unparseable status line leaves status/ctype None and the body as
+    whatever follows the terminator (the whole payload without one)."""
+    status: object = None
+    ctype: object = None
+    body = payload
+    he = payload.find(_HDR_END)
+    if he >= 0:
+        body = payload[he + len(_HDR_END):]
+        try:
+            lines = payload[:he].decode("latin-1").split("\r\n")
+            parts = lines[0].split(" ")
+            if parts[0].startswith("HTTP/") and len(parts) >= 2:
+                status = int(parts[1])
+            for line in lines[1:]:
+                k, _, v = line.partition(":")
+                if k.strip().lower() == "content-type":
+                    ctype = v.strip()
+        except (ValueError, IndexError):
+            status = None
+    return (
+        headers.get("warc-target-uri", ""),
+        headers.get("warc-date", ""),
+        status,
+        ctype,
+        body,
+        len(body),
     )
 
 
@@ -283,62 +330,7 @@ def parse_warc_bytes(
     dropped for a mangled envelope, mirroring the crawl loop's
     never-lose-a-fetch contract; only record-level malformation
     (bad/missing WARC Content-Length, truncation) resyncs."""
-    pos = 0
-    n = len(blob)
-    while True:
-        pos = blob.find(_MAGIC, pos)
-        if pos < 0:
-            return
-        hdr_start = pos + len(_MAGIC)
-        hdr_end = blob.find(_HDR_END, hdr_start)
-        if hdr_end < 0:
-            return
-        try:
-            headers = {}
-            for line in blob[hdr_start:hdr_end].decode("utf-8").split(
-                "\r\n"
-            ):
-                k, _, v = line.partition(":")
-                headers[k.strip().lower()] = v.strip()
-            length = int(headers["content-length"])
-            if length < 0:
-                raise ValueError(length)
-        except (KeyError, ValueError, UnicodeDecodeError):
-            pos = hdr_start
-            continue
-        body_start = hdr_end + len(_HDR_END)
-        body_end = body_start + length
-        if body_end > n:
-            pos = hdr_start
-            continue
-        if headers.get("warc-type") == "response":
-            payload = blob[body_start:body_end]
-            status: object = None
-            ctype: object = None
-            body = payload
-            he = payload.find(_HDR_END)
-            if he >= 0:
-                body = payload[he + len(_HDR_END):]
-                try:
-                    lines = payload[:he].decode("latin-1").split("\r\n")
-                    parts = lines[0].split(" ")
-                    if parts[0].startswith("HTTP/") and len(parts) >= 2:
-                        status = int(parts[1])
-                    for line in lines[1:]:
-                        k, _, v = line.partition(":")
-                        if k.strip().lower() == "content-type":
-                            ctype = v.strip()
-                except (ValueError, IndexError):
-                    status = None
-            yield (
-                headers.get("warc-target-uri", ""),
-                headers.get("warc-date", ""),
-                status,
-                ctype,
-                body,
-                len(body),
-            )
-        pos = body_end
+    return _walk(blob, "response", _read_response)
 
 
 _WARC_SCHEMA = (
@@ -350,36 +342,14 @@ _WARC_SCHEMA = (
 def parse_warc(df: DataFrame, bytes_col: str = "content") -> DataFrame:
     """Binary WARC-blob column → response records; one Arrow pass,
     zero shuffles, html stays binary."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                "url": [], "warc_date": [], "status": [],
-                "content_type": [], "html": [], "n_bytes": [],
-            }
-            for blob in pdf[bytes_col]:
-                if blob is None:
-                    continue
-                for u, d, s, c, b, nb in parse_warc_bytes(bytes(blob)):
-                    cols["url"].append(u)
-                    cols["warc_date"].append(d)
-                    cols["status"].append(s)
-                    cols["content_type"].append(c)
-                    cols["html"].append(b)
-                    cols["n_bytes"].append(nb)
-            yield pd.DataFrame(cols)
-
-    return df.mapInPandas(_parse, _WARC_SCHEMA)
+    return _parse_blobs(df, bytes_col, parse_warc_bytes, _WARC_SCHEMA)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC directory → raw page table ``(url, warc_ts, status,
     content_type, html, n_bytes)`` — the input_hint shape with html
     binary. One task per file."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-    return with_warc_ts(parse_warc(files)).select(
-        "url", "warc_ts", "status", "content_type", "html", "n_bytes"
-    )
+    return _read_dir(spark, path, parse_warc)
 
 
 def serialize_warc(
@@ -393,22 +363,9 @@ def serialize_warc(
 ) -> DataFrame:
     """Inverse plumbing / fixture builder: one WARC blob per group,
     records url-sorted for partitioning-invariant bytes."""
-    gname = group_col
+    def build(pdf: pd.DataFrame) -> bytes:
+        heads = (pdf[c] for c in (url_col, date_col, status_col, ctype_col))
+        html = (bytes(b) if b is not None else b"" for b in pdf[html_col])
+        return warc_file_bytes(zip(*heads, html))
 
-    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(url_col, kind="mergesort")
-        blob = warc_file_bytes(
-            zip(
-                pdf[url_col],
-                pdf[date_col],
-                pdf[status_col],
-                pdf[ctype_col],
-                (bytes(b) if b is not None else b"" for b in pdf[html_col]),
-            )
-        )
-        return pd.DataFrame({gname: [key[0]], "warc": [blob]})
-
-    gtype = df.schema[group_col].dataType.simpleString()
-    return df.groupBy(group_col).applyInPandas(
-        _build, f"{gname} {gtype}, warc binary"
-    )
+    return _serialize(df, group_col, url_col, "warc", build)
